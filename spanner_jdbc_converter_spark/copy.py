@@ -250,11 +250,20 @@ class TableExistsError(RuntimeError):
 
 
 def _dest_state(spark: SparkSession, dest_path: str) -> tuple[bool, bool]:
-    """(exists, empty) for a parquet destination."""
+    """(exists, empty) for a parquet destination.  A directory without
+    parquet files is an existing empty table; any other read failure,
+    such as a corrupt part file, propagates rather than reading as
+    "absent" (which would let SKIP_EXISTING skip the table silently)."""
+    from pyspark.errors import AnalysisException
+
     try:
         df = spark.read.parquet(dest_path)
-    except Exception:
-        return False, True
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return False, True
+        if exc.getCondition() == "UNABLE_TO_INFER_SCHEMA":
+            return True, True
+        raise
     return True, df.isEmpty()
 
 
@@ -291,7 +300,9 @@ def copy_table(
     )
     if target_partitions:
         observed = observed.repartition(target_partitions)
-    observed.write.mode(to_save_mode(mode) or "error").parquet(dest_path)
+    # The copy decision is made above; "ignore"/"error" would re-decide it
+    # by path existence and skip or refuse an existing EMPTY destination.
+    observed.write.mode("overwrite").parquet(dest_path)
 
     metrics = obs.get
     result.record_count = metrics["rows"] or 0

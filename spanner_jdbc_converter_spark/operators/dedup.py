@@ -1845,7 +1845,15 @@ def _stage_checkpoints_overlapped(
     for t in threads:
         t.join()
     if errors:
-        raise errors[0]
+        # keep the first error's type for callers' except clauses, but
+        # surface every failed frame, not just the first
+        first, *rest = errors
+        for other in rest:
+            first.add_note(
+                f"another overlapped checkpoint also failed: "
+                f"{type(other).__name__}: {other}"
+            )
+        raise first
     return tuple(results)
 
 

@@ -2,16 +2,15 @@
 opaque ``binary`` payloads + typed metadata, processed by Arrow-batched
 ``mapInPandas`` UDFs.
 
-Five formats decode for REAL with the standard library alone — WAV/PCM
+Formats decode for REAL with the standard library alone — WAV/PCM
 audio (``wave``), binary PGM images, YUV4MPEG2 grayscale video,
-zlib-compressed PNG (all five scanline filters), and baseline JFIF/JPEG
-(Huffman entropy decode, dequant, integer IDCT, YCbCr) — each as a
-genuine encode → container-parse → decode → feature round trip.  Only
-codecs that genuinely need external libraries (H.264, progressive/
-arithmetic JPEG, WebP, ...) remain behind the ``decode_media``
-production hook (NotImplementedError: no PIL/libav in this container);
-the Spark-side plumbing — schema contracts, binary payload handling,
-Arrow batch iteration — is identical either way.
+zlib-compressed PNG (all five scanline filters), GIF, BMP, and
+baseline and progressive JFIF/JPEG (Huffman entropy decode, dequant,
+integer IDCT, YCbCr) — each as a genuine encode → container-parse →
+decode → feature round trip.  Codecs that need external libraries
+(H.264, arithmetic-coded JPEG, WebP, ...) are not implemented; a
+decoder for them plugs into the same Spark-side plumbing (schema
+contracts, binary payload handling, Arrow batch iteration).
 
 At 100 TB the pattern is: keep payloads in their own column (parquet
 stores them row-group-columnar, scans that don't touch them never read
@@ -67,14 +66,6 @@ def attach_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def decode_media(payload: bytes, media_type: str):  # pragma: no cover - stub
-    """Real codec hook — image/audio decode is NOT available in this
-    container (no PIL/libav).  Plug a codec here in production."""
-    raise NotImplementedError(
-        f"no codec for {media_type}: decode libraries not present in this environment"
-    )
-
-
 def _fake_features(payload: bytes, n: int = 4) -> list[float]:
     """Deterministic stand-in for decoded features: byte-level statistics
     (mean, min, max, len-scaled) — stable across runs/partitions."""
@@ -92,8 +83,9 @@ def extract_features(df: DataFrame, batch_size_hint: int = 256) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     ``mapInPandas`` streams record batches through Python — constant
-    memory per task regardless of table size.  The decode call is the
-    stubbed deterministic fake (see decode_media for the real hook).
+    memory per task regardless of table size.  The features are a
+    deterministic byte-statistics stand-in for a decoder's output; the
+    real decoders are the per-format ``decode_*_features`` below.
     """
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -183,10 +175,9 @@ def media_summary(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REAL audio decode — WAV/PCM is stdlib-parseable (wave + struct), the one
-# media format this container can genuinely decode.  Image/video stay
-# stubbed hooks (decode_media); this path exercises a true
-# encode → container-parse → decode → feature round trip.
+# REAL audio decode — WAV/PCM is stdlib-parseable (wave + struct); this
+# path exercises a true encode → container-parse → decode → feature
+# round trip.
 # ---------------------------------------------------------------------------
 
 WAV_RATE = 8000
@@ -747,7 +738,7 @@ def _synth_dup_samples(doc_id: int) -> list[int]:
 # ---------------------------------------------------------------------------
 # REAL image decode — PGM (P5) is header + raw bytes, parseable with the
 # standard library alone; the 2×2 block-average downsample is exact
-# integer math.  Video remains the stubbed hook (decode_media).
+# integer math.
 # ---------------------------------------------------------------------------
 
 IMAGE_FEATURE_SCHEMA = T.StructType(
@@ -966,9 +957,8 @@ def decode_pgm_features(df: DataFrame) -> DataFrame:
 # is a genuine, spec'd container (`YUV4MPEG2 <params>\n` stream header,
 # `FRAME\n`-delimited raw planes) that needs no codec library: the frame
 # walk, dimension parse, and per-frame plane decode below follow the
-# format for real.  This replaces the last NotImplementedError stub —
-# decode_media remains only as the production hook for COMPRESSED
-# codecs (H.264 etc.), which genuinely need libav.
+# format for real.  Compressed video codecs (H.264 etc.) need libav and
+# are out of scope.
 # ---------------------------------------------------------------------------
 
 VIDEO_FEATURE_SCHEMA = T.StructType(
@@ -1255,11 +1245,10 @@ def decode_y4m_frame_dhash(df: DataFrame, frame_stride: int = 1) -> DataFrame:
 # REAL compressed-image decode — PNG (RFC 2083) with stdlib zlib only:
 # signature check, CRC-verified chunk walk, IHDR parse, IDAT inflate, and
 # the full scanline unfilter (types 0-4 incl. Paeth).  PNG is what text
-# corpora actually carry (VERDICT r10 "What's missing" #2) and, unlike
-# PGM/Y4M, exercises genuine DEFLATE decompression + per-row predictive
-# filters; the encoder below cycles all five filter types so every
-# unfilter path is exercised and oracle-checked.  decode_media stays the
-# hook only for codec-LIBRARY formats (JPEG/H.264 — need libjpeg/libav).
+# corpora actually carry and, unlike PGM/Y4M, exercises genuine DEFLATE
+# decompression + per-row predictive filters; the encoder below cycles
+# all five filter types so every unfilter path is exercised and
+# oracle-checked.
 # ---------------------------------------------------------------------------
 
 PNG_FEATURE_SCHEMA = T.StructType(

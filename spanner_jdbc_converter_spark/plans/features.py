@@ -22,7 +22,11 @@ from pyspark.sql import functions as F
 from spanner_jdbc_converter_spark.catalog import load_table
 from spanner_jdbc_converter_spark.operators import graph as gr
 from spanner_jdbc_converter_spark.operators import sketches as sk
-from spanner_jdbc_converter_spark.plans.registry import register
+from spanner_jdbc_converter_spark.plans.registry import (
+    materialized,
+    register,
+    session_store,
+)
 
 # ---------------------------------------------------------------------------
 # Count-min heavy hitters — sketched vs exact, side by side.
@@ -943,151 +947,74 @@ def graph_triangle_coeffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gr.triangle_counts_from(e, per_node, with_clustering=True)
 
 
-#: Session cache for the exact oriented triangle closure of the part
-#: co-purchase graph — TWO corpus entries consume it
-#: (graph_triangle_coeffs needs the per-node counts,
-#: graph_triangle_estimate needs the global exact count = Σ/3), and
-#: before r17 EACH ran the full O(m^{3/2}) wedge closure (~7 s of the
-#: corpus wall duplicated — VERDICT r16 "Next round #2").  Same
-#: (appId, fixture) keying / eviction discipline as extensions'
-#: _GROUPS_STORE; payload is (e, per_node): e is the localCheckpointed
-#: canonical edge frame, per_node the persisted |V|-bounded counts —
-#: the triangle STREAM is never materialized.
-_TRI_STORE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-#: Session cache one level BELOW the closure: the localCheckpointed
-#: canonical PAIR-COUNT frame (u, v, n) of the part co-purchase graph
-#: — u < v, n = orders sharing the pair.  r18 (guide §2.4 one
-#: derivation, many consumers): the counts ride the frame so FOUR
-#: entries share ONE basket pass — the two triangle entries and
-#: graph_kcore_layers project (u, v) (the keys are exactly the old
-#: distinct edge set; the extra 8-byte n on their 2-3 reads of the
-#: checkpoint is the price of not re-deriving), and
-#: graph_label_propagation takes the support-≥2 subgraph
-#: (filter n >= 2), which previously re-ran the whole
-#: basket + pair-count derivation inside its timed region.  Same
-#: keying/eviction discipline; checkpoint-backed, eviction drops the
-#: reference.
-_EDGE_STORE: dict[tuple[str, str], DataFrame] = {}
+#: The exact oriented triangle closure of the part co-purchase graph:
+#: graph_triangle_coeffs needs the per-node counts and
+#: graph_triangle_estimate the global exact count (Σ/3), and each used to
+#: run the full O(m^{3/2}) wedge closure.  Payload (e, per_node): e is
+#: the checkpointed canonical edge frame, per_node the persisted
+#: |V|-bounded counts; the triangle STREAM is never materialized.
+@session_store("features._TRI_STORE")
+def _tri_closure(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    e = _canonical_copurchase(spark, sf_dir)
+    return e, materialized(gr._per_node_triangles(e))[0]
 
 
-#: Session cache for the per-order sorted distinct BRAND baskets
-#: (l_orderkey, brands) — r18: THREE entries run the identical
-#: broadcast-dim join + l_orderkey shuffle + collect_set inside their
-#: timed regions (join_copurchase_lift, graph_pagerank_brands,
-#: graph_triangle_brands); the basket frame is the shared intermediate
-#: they all reduce from (pair counts / totals / edges), ~|orders| rows
-#: of ≤25-element arrays against |lineitem| input.  Same keying and
-#: eviction discipline as _EDGE_STORE; checkpoint-backed.
-_BRAND_BASKET_STORE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spanner_jdbc_converter_spark.plans.registry import evict_other_keys
-
-    key = _store_key(spark, sf_dir)
-    evict_other_keys(_BRAND_BASKET_STORE, key, lambda e: None)
-    hit = _BRAND_BASKET_STORE.get(key)
-    if hit is None:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        hit = (
-            li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-            .groupBy("l_orderkey")
-            .agg(F.sort_array(F.collect_set("p_brand")).alias("brands"))
-            .localCheckpoint()
-        )
-        _BRAND_BASKET_STORE[key] = hit
-    return hit
-
-
-#: Session cache for the canonical BRAND pair-count frame (u < v, n =
-#: orders sharing the pair) — ≤ |brands|² = 625 rows at any SF, derived
-#: from the basket store above.  graph_pagerank_brands and
-#: graph_triangle_brands consume the IDENTICAL support-≥5 subgraph
-#: (pagerank mirrors it, the triangle closure keeps it oriented); before
-#: r18 each re-ran the basket explosion + pair aggregation in its timed
-#: region.
-_BRAND_PAIRN_STORE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _brand_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spanner_jdbc_converter_spark.plans.registry import evict_other_keys
-
-    key = _store_key(spark, sf_dir)
-    evict_other_keys(_BRAND_PAIRN_STORE, key, lambda e: None)
-    hit = _BRAND_PAIRN_STORE.get(key)
-    if hit is None:
-        pair_list = F.expr(
-            "flatten(transform(brands, (x, i) -> "
-            "transform(slice(brands, i + 2, size(brands)), "
-            "y -> struct(x AS src, y AS dst))))"
-        )
-        hit = (
-            _brand_baskets(spark, sf_dir)
-            .select(F.explode(pair_list).alias("pr"))
-            .groupBy(F.col("pr.src").alias("u"), F.col("pr.dst").alias("v"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        _BRAND_PAIRN_STORE[key] = hit
-    return hit
-
-
-def _store_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import os
-
-    return (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-
-
+#: One level BELOW the closure: the checkpointed canonical PAIR-COUNT
+#: frame (u, v, n) of the part co-purchase graph, u < v, n = orders
+#: sharing the pair.  The counts ride the frame so FOUR entries share
+#: ONE basket pass: the two triangle entries and graph_kcore_layers
+#: project (u, v), and graph_label_propagation takes the support-≥2
+#: subgraph (n >= 2).
+@session_store("features._EDGE_STORE")
 def _copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The session-cached canonical pair-count frame (see _EDGE_STORE)."""
-    from spanner_jdbc_converter_spark.plans.registry import evict_other_keys
-
-    key = _store_key(spark, sf_dir)
-    evict_other_keys(_EDGE_STORE, key, lambda e: None)
-    hit = _EDGE_STORE.get(key)
-    if hit is None:
-        # the _copurchase_edges basket pass, with the per-pair order
-        # count kept instead of thrown away by distinct(): the slice
-        # emission is x < y over a per-order SET, so keys are already
-        # canonical (u < v, no self-loops) and groupBy keys == the old
-        # distinct edge set
-        hit = (
-            _copurchase_pairs(spark, sf_dir)
-            .groupBy(F.col("src").alias("u"), F.col("dst").alias("v"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        _EDGE_STORE[key] = hit
-    return hit
+    # the slice emission is x < y over a per-order SET, so keys are
+    # already canonical (u < v, no self-loops)
+    return (
+        _copurchase_pairs(spark, sf_dir)
+        .groupBy(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
 
 
 def _canonical_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _copurchase_pair_counts(spark, sf_dir).select("u", "v")
 
 
-def _tri_closure(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    from pyspark import StorageLevel
+#: The per-order sorted distinct BRAND baskets (l_orderkey, brands):
+#: join_copurchase_lift, graph_pagerank_brands and graph_triangle_brands
+#: all reduce from it, so the broadcast-dim join + l_orderkey shuffle +
+#: collect_set runs once.  Checkpoint-backed.
+@session_store("features._BRAND_BASKET_STORE")
+def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return (
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_set("p_brand")).alias("brands"))
+        .localCheckpoint()
+    )
 
-    from spanner_jdbc_converter_spark.plans.registry import evict_other_keys
 
-    key = _store_key(spark, sf_dir)
-    evict_other_keys(_TRI_STORE, key, lambda t: t[1].unpersist())
-    hit = _TRI_STORE.get(key)
-    if hit is not None:
-        return hit
-    e = _canonical_copurchase(spark, sf_dir)
-    per_node = gr._per_node_triangles(e).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        per_node.count()  # materialize the one closure computation
-    except BaseException:
-        per_node.unpersist()
-        raise
-    _TRI_STORE[key] = (e, per_node)
-    return e, per_node
+#: The canonical BRAND pair-count frame (u < v, n = orders sharing the
+#: pair), ≤ |brands|² = 625 rows at any SF, derived from the basket
+#: store.  graph_pagerank_brands and graph_triangle_brands consume the
+#: identical support-≥5 subgraph.
+@session_store("features._BRAND_PAIRN_STORE")
+def _brand_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pair_list = F.expr(
+        "flatten(transform(brands, (x, i) -> "
+        "transform(slice(brands, i + 2, size(brands)), "
+        "y -> struct(x AS src, y AS dst))))"
+    )
+    return (
+        _brand_baskets(spark, sf_dir)
+        .select(F.explode(pair_list).alias("pr"))
+        .groupBy(F.col("pr.src").alias("u"), F.col("pr.dst").alias("v"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
 
 
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1217,36 +1144,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", "v")
     )
     return gr.label_propagation_from(ce)
-
-
-# ---------------------------------------------------------------------------
-# Session-cache primers (VERDICT r14 "Next round #1" — see plans/registry.py
-# CACHE_PRIMERS): build the shared triangle closure untimed before a bench
-# sweep so neither triangle entry pays the other's closure build.
-# ---------------------------------------------------------------------------
-from spanner_jdbc_converter_spark.plans.registry import register_cache_primer  # noqa: E402
-
-
-@register_cache_primer("features._TRI_STORE")
-def _prime_tri_store(spark: SparkSession, sf_dir: str) -> None:
-    _tri_closure(spark, sf_dir)
-
-
-@register_cache_primer("features._EDGE_STORE")
-def _prime_edge_store(spark: SparkSession, sf_dir: str) -> None:
-    # _tri_closure's primer fills this transitively; an explicit primer
-    # keeps the edge frame warm even when the closure primer is skipped
-    _canonical_copurchase(spark, sf_dir)
-
-
-@register_cache_primer("features._BRAND_BASKET_STORE")
-def _prime_brand_basket_store(spark: SparkSession, sf_dir: str) -> None:
-    _brand_baskets(spark, sf_dir)
-
-
-@register_cache_primer("features._BRAND_PAIRN_STORE")
-def _prime_brand_pairn_store(spark: SparkSession, sf_dir: str) -> None:
-    _brand_pair_counts(spark, sf_dir)
 
 
 @register(

@@ -24,7 +24,11 @@ from spanner_jdbc_converter_spark.catalog import load_table
 from spanner_jdbc_converter_spark.operators import clustering as cl
 from spanner_jdbc_converter_spark.operators import text as tx
 from spanner_jdbc_converter_spark.plans.extensions import _TOKS_SQL, _cos_sql
-from spanner_jdbc_converter_spark.plans.registry import register
+from spanner_jdbc_converter_spark.plans.registry import (
+    materialized,
+    register,
+    session_store,
+)
 
 # ---------------------------------------------------------------------------
 # k-means over embeddings — oracle unrolls the fixed Lloyd iterations.
@@ -1076,40 +1080,12 @@ def _bpe_oracle(rounds: int, segment: bool = False) -> str:
     return "WITH RECURSIVE\n" + ",\n".join(parts) + "\n" + sel
 
 
-#: Session cache for the one BPE learn loop — the merge-table and
-#: segmentation entries consume the same checkpointed round stages, so
-#: the loop runs once per (appId, fixture).  Same keying/eviction
-#: discipline as extensions._SPAN_STORE and plans/etl.py's stores.
-_BPE_STORE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+#: The one BPE learn loop: the merge-table and segmentation entries
+#: consume the same checkpointed round stages, so the loop runs once.
+@session_store("mining._BPE_STORE")
 def _bpe_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    import os
-
-    from pyspark import StorageLevel
-
-    from spanner_jdbc_converter_spark.plans.registry import evict_other_keys
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    evict_other_keys(
-        _BPE_STORE, key, lambda t: (t[0].unpersist(), t[1].unpersist())
-    )
-    hit = _BPE_STORE.get(key)
-    if hit is not None:
-        return hit
     d = load_table(spark, sf_dir, "documents")
-    merges, segment = tx.bpe_learn(d)
-    merges = merges.persist(StorageLevel.MEMORY_AND_DISK)
-    segment = segment.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        merges.count()
-        segment.count()
-    except BaseException:
-        merges.unpersist()
-        segment.unpersist()
-        raise
-    _BPE_STORE[key] = (merges, segment)
-    return merges, segment
+    return materialized(*tx.bpe_learn(d))
 
 
 @register("text_bpe_merges", oracle=_bpe_oracle(tx.BPE_MERGE_ROUNDS))
@@ -1341,41 +1317,15 @@ def _unigram_oracle(segment: bool = False) -> str:
     FROM u{last}, tot"""
 
 
-#: Session cache for the unigram-LM loop (the _BPE_STORE discipline):
-#: text_unigram_lm_pieces and text_tokenizer_fertility consume the same
-#: learned model — run the EM rounds once per (appId, fixture).
-_UNIGRAM_STORE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+#: The unigram-LM model: text_unigram_lm_pieces and
+#: text_tokenizer_fertility consume the same learned model, so the EM
+#: rounds run once.
+@session_store("mining._UNIGRAM_STORE")
 def _unigram_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    import os
-
-    from pyspark import StorageLevel
-
-    from spanner_jdbc_converter_spark.plans.registry import evict_other_keys
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    evict_other_keys(
-        _UNIGRAM_STORE, key, lambda t: (t[0].unpersist(), t[1].unpersist())
-    )
-    hit = _UNIGRAM_STORE.get(key)
-    if hit is not None:
-        return hit
     d = load_table(spark, sf_dir, "documents")
-    pieces, seg = tx.unigram_lm_learn(d)
-    pieces = pieces.persist(StorageLevel.MEMORY_AND_DISK)
-    seg = seg.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        pieces.count()
-        seg.count()
-    except BaseException:
-        pieces.unpersist()
-        seg.unpersist()
-        raise
-    _UNIGRAM_STORE[key] = (pieces, seg)
-    return pieces, seg
+    return materialized(*tx.unigram_lm_learn(d))
 
 
 @register("text_unigram_lm_pieces", oracle=_unigram_oracle())
@@ -2845,24 +2795,6 @@ def text_crossdoc_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_empty_inputs.py.  See operators/text.py::crossdoc_scrub."""
     d = load_table(spark, sf_dir, "documents")
     return tx.crossdoc_scrub(d)
-
-
-# ---------------------------------------------------------------------------
-# Session-cache primers (VERDICT r14 "Next round #1" — see plans/registry.py
-# CACHE_PRIMERS): build the learned-tokenizer stores untimed before a bench
-# sweep so no timed entry pays another entry's vocab training.
-# ---------------------------------------------------------------------------
-from spanner_jdbc_converter_spark.plans.registry import register_cache_primer  # noqa: E402
-
-
-@register_cache_primer("mining._BPE_STORE")
-def _prime_bpe_store(spark: SparkSession, sf_dir: str) -> None:
-    _bpe_frames(spark, sf_dir)
-
-
-@register_cache_primer("mining._UNIGRAM_STORE")
-def _prime_unigram_store(spark: SparkSession, sf_dir: str) -> None:
-    _unigram_frames(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,18 @@
 """Shared registry for the driver-checked query corpus.
 
 Modules (queries.py, extensions.py, streaming.py) register entries here;
-__spark_entry__ and the oracle harness read the combined dicts.
+__spark_entry__ and the oracle harness read the combined dicts.  The
+session stores several entries share also live here (``session_store``).
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import threading
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -34,58 +39,100 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-#: Session-cache primers, keyed by the store they build.  Several corpus
-#: entries share (appId, sf_dir)-keyed caches (_curated, the PQ/residual
-#: codebooks, span/winnow/group frames, BPE/unigram vocab frames); the
-#: FIRST entry to touch a store pays its build cost, so in a timed bench
-#: sweep the payer is whichever entry happens to run first — a registry
-#: reorder shows up as a phantom regression (VERDICT r10/r13/r14
-#: adjudication tax).  Each store-owning module registers a primer here;
-#: bench.py runs them all UNTIMED before the timed loop so no timed entry
-#: ever pays another entry's cache build.  Primers must be idempotent
-#: (they call the same memoized helper the entries call).
-CACHE_PRIMERS: dict[str, Callable[[SparkSession, str], None]] = {}
+class SessionStore:
+    """A derivation several corpus entries share, built once per key.
+
+    The key is (Spark application id, absolute fixture dir).  Only the
+    current key is kept: a call with a new key first releases every
+    other payload, so a long-lived process sweeping fixture dirs or
+    restarting its SparkSession does not pin dead persisted frames.
+    A per-store lock is held across the build, so concurrent callers
+    build once; stores may call other stores from their build as long
+    as those calls form no cycle.  A build that raises stores nothing.
+    """
+
+    def __init__(self, build: Callable[[SparkSession, str], object]):
+        functools.update_wrapper(self, build)
+        self.build = build
+        #: key -> payload; at most one entry outside a call.
+        self.entries: dict[tuple[str, str], object] = {}
+        self._lock = threading.Lock()
+
+    def __call__(self, spark: SparkSession, sf_dir: str):
+        key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+        with self._lock:
+            for stale in [k for k in self.entries if k != key]:
+                _release(self.entries.pop(stale))
+            if key not in self.entries:
+                self.entries[key] = self.build(spark, sf_dir)
+            return self.entries[key]
+
+    def clear(self) -> None:
+        """Release and drop every payload."""
+        with self._lock:
+            while self.entries:
+                _release(self.entries.popitem()[1])
 
 
-def register_cache_primer(store_name: str):
-    """Decorator: register a (spark, sf_dir) -> None session-cache builder."""
+def _release(payload: object) -> None:
+    """Unpersist the DataFrames of a payload (a frame or a tuple of
+    values).  Checkpoint-backed frames hold no cache entry, so this is a
+    no-op for them, as for dict payloads.  Best-effort: the payload's
+    SparkContext may already be dead."""
+    frames = payload if isinstance(payload, tuple) else (payload,)
+    for df in frames:
+        if isinstance(df, DataFrame):
+            try:
+                df.unpersist()
+            except Exception:
+                pass
 
-    def deco(fn):
-        CACHE_PRIMERS[store_name] = fn
-        return fn
+
+#: Every session store by name, in definition order.  bench.py primes
+#: them all (``prime_session_caches``) untimed before its timed loop:
+#: otherwise the first entry to touch a store pays its build, and a
+#: registry reorder shows up as a phantom regression.
+SESSION_STORES: dict[str, SessionStore] = {}
+
+
+def session_store(name: str):
+    """Decorator: turn ``build(spark, sf_dir) -> payload`` into a
+    registered ``SessionStore`` named ``name`` (``"<module>._X_STORE"``,
+    the name bench records publish per-store seconds under)."""
+
+    def deco(build):
+        store = SESSION_STORES[name] = SessionStore(build)
+        return store
 
     return deco
 
 
+def materialized(*frames: DataFrame) -> tuple[DataFrame, ...]:
+    """Persist each frame MEMORY_AND_DISK and materialize it with one
+    count.  On any failure, a cancelled job included, unpersist them all
+    so a retry does not orphan cache entries."""
+    frames = tuple(df.persist(StorageLevel.MEMORY_AND_DISK) for df in frames)
+    try:
+        for df in frames:
+            df.count()
+    except BaseException:
+        for df in frames:
+            df.unpersist()
+        raise
+    return frames
+
+
 def prime_session_caches(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Build every registered session cache for (spark, sf_dir); returns
-    {store name: build seconds} so callers (bench.py) can publish the
-    per-primer cost — the untimed prime pass grew to ~0.75× the timed
-    corpus wall by r17, and VERDICT r17 requires its growth to be
-    auditable per store, not one opaque total.  Failures propagate — a
-    primer that cannot build is the same defect as the entry that owns
-    it failing."""
+    """Build every session store for (spark, sf_dir); returns {store
+    name: build seconds} so callers (bench.py) can publish the cost of
+    the untimed prime pass per store, not as one opaque total.  Failures
+    propagate — a store that cannot build is the same defect as the
+    entry that owns it failing."""
     import time
 
     primed: dict[str, float] = {}
-    for store_name, fn in CACHE_PRIMERS.items():
+    for name, store in SESSION_STORES.items():
         start = time.perf_counter()
-        fn(spark, sf_dir)
-        primed[store_name] = round(time.perf_counter() - start, 3)
+        store(spark, sf_dir)
+        primed[name] = round(time.perf_counter() - start, 3)
     return primed
-
-
-def evict_other_keys(store: dict, key: tuple, unpersist) -> None:
-    """ADVICE r7: session caches keyed by (appId, dir) must not pin
-    persisted frames for the life of the process — a long-lived session
-    sweeping many fixture dirs (or restarting its SparkSession) would
-    otherwise accumulate an entry per dead key.  Keep only the CURRENT
-    key: unpersist and drop everything else; releases against a dead
-    SparkContext are best-effort.  Lives here (not etl.py) so every
-    corpus module can share it without circular imports."""
-    for k in [k for k in store if k != key]:
-        entry = store.pop(k)
-        try:
-            unpersist(entry)
-        except Exception:
-            pass

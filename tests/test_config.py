@@ -170,38 +170,58 @@ def test_gate_window_contains_every_never_checked_entry():
     assert not missing, f"never-checked entries outside the gate window: {missing}"
 
 
+#: Every session store the corpus shares, by the name bench records
+#: publish its build seconds under.
+_SESSION_STORE_NAMES = {
+    "queries._S1_VIEWS",
+    "extensions._SPAN_STORE",
+    "extensions._WINNOW_STORE",
+    "extensions._GROUPS_STORE",
+    "extensions._IMG_GROUPS_STORE",
+    "extensions._OPREP_STORE",
+    "etl._PIPELINE_STORE",
+    "etl._PQ_BOOKS_STORE",
+    "etl._RES_BOOKS_STORE",
+    "etl._OPQ_STORE",
+    "etl._SIG_STATE_STORE",
+    "mining._BPE_STORE",
+    "mining._UNIGRAM_STORE",
+    "features._TRI_STORE",
+    "features._EDGE_STORE",
+    "features._BRAND_BASKET_STORE",
+    "features._BRAND_PAIRN_STORE",
+}
+
+
 def test_cache_primer_registry_covers_every_session_store():
-    """VERDICT r14 "Next round #1": every module-level session-cache
-    store in the corpus modules must have a registered primer so
-    bench.py's untimed pre-pass (plans/registry.py::prime_session_caches)
-    builds it before the timed loop — a store minted without a primer
-    silently reintroduces the position-dependent cache-build tax this
-    round removed."""
+    """Every session store is registered (so bench.py's untimed pre-pass
+    builds it before the timed loop) under its module's name, and is the
+    module attribute its entries call."""
+    import importlib
+
     import spanner_jdbc_converter_spark.plans  # noqa: F401 — load all corpus modules
 
-    from spanner_jdbc_converter_spark.plans import etl, extensions, features, mining
-    from spanner_jdbc_converter_spark.plans.registry import CACHE_PRIMERS
+    from spanner_jdbc_converter_spark.plans.registry import SESSION_STORES
 
-    for mod, modname in (
-        (etl, "etl"),
-        (extensions, "extensions"),
-        (mining, "mining"),
-        (features, "features"),
-    ):
-        stores = [
-            a
-            for a in vars(mod)
-            if a.endswith("_STORE") and isinstance(getattr(mod, a), dict)
-        ]
-        assert stores, f"{modname}: expected at least one session store"
-        missing = [a for a in stores if f"{modname}.{a}" not in CACHE_PRIMERS]
-        assert not missing, f"{modname}: stores without primers: {missing}"
-    unknown = [
-        k
-        for k in CACHE_PRIMERS
-        if k.split(".", 1)[0] not in ("etl", "extensions", "mining", "features")
+    assert set(SESSION_STORES) == _SESSION_STORE_NAMES
+    for name, store in SESSION_STORES.items():
+        mod = importlib.import_module(store.__module__)
+        assert mod.__name__.rsplit(".", 1)[1] == name.split(".", 1)[0], name
+        assert getattr(mod, store.__name__) is store, name
+
+
+def test_no_hand_rolled_session_store():
+    """Session keying lives in plans/registry.py only: any other corpus
+    module that reads the application id is building its own store."""
+    import pathlib
+
+    plans = pathlib.Path(__file__).resolve().parents[1] / "spanner_jdbc_converter_spark" / "plans"
+    offenders = [
+        p.name
+        for p in sorted(plans.glob("*.py"))
+        if p.name != "registry.py" and "applicationId" in p.read_text()
     ]
-    assert not unknown, f"primers for unknown modules: {unknown}"
+    assert not offenders, f"hand-rolled session keying in {offenders}"
 
 
 def test_prime_session_caches_populates_every_store(spark, sf_dir):
@@ -210,17 +230,105 @@ def test_prime_session_caches_populates_every_store(spark, sf_dir):
     holding the (appId, sf_dir) key its entries will hit."""
     import os
 
-    from spanner_jdbc_converter_spark.plans import etl, extensions, features, mining
     from spanner_jdbc_converter_spark.plans.registry import (
-        CACHE_PRIMERS,
+        SESSION_STORES,
         prime_session_caches,
     )
 
     primed = prime_session_caches(spark, sf_dir)
-    assert sorted(primed) == sorted(CACHE_PRIMERS)
+    assert set(primed) == _SESSION_STORE_NAMES
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    mods = {"etl": etl, "extensions": extensions, "mining": mining, "features": features}
-    for store_name in CACHE_PRIMERS:
-        modname, attr = store_name.split(".", 1)
-        store = getattr(mods[modname], attr)
-        assert key in store, f"{store_name} not populated for session key"
+    for name, store in SESSION_STORES.items():
+        assert list(store.entries) == [key], f"{name} not populated for session key"
+
+
+class _FakeContext:
+    applicationId = "app-1"
+
+
+class _FakeSpark:
+    sparkContext = _FakeContext()
+
+
+def test_session_store_builds_once_under_concurrent_callers():
+    """Threads racing on a cold store run the build exactly once and
+    all get the same payload."""
+    import sys
+    import threading
+    import time
+
+    from spanner_jdbc_converter_spark.plans.registry import SessionStore
+
+    calls: list[int] = []
+
+    def build(spark, sf_dir):
+        calls.append(1)
+        time.sleep(0.05)  # hold the build open while the others arrive
+        return object()
+
+    store = SessionStore(build)
+    n = 8
+    barrier = threading.Barrier(n)
+    got: list[object] = []
+
+    def caller():
+        barrier.wait(timeout=10)
+        got.append(store(_FakeSpark(), "fixture"))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=caller) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1
+    assert len(got) == n and all(p is got[0] for p in got)
+
+
+def test_session_store_failed_build_leaves_no_entry():
+    """A build that raises stores nothing; the next call rebuilds."""
+    from spanner_jdbc_converter_spark.plans.registry import SessionStore
+
+    outcomes = [RuntimeError("cancelled"), "payload"]
+
+    def build(spark, sf_dir):
+        out = outcomes.pop(0)
+        if isinstance(out, Exception):
+            raise out
+        return out
+
+    store = SessionStore(build)
+    with pytest.raises(RuntimeError, match="cancelled"):
+        store(_FakeSpark(), "fixture")
+    assert store.entries == {}
+    assert store(_FakeSpark(), "fixture") == "payload"
+    assert len(store.entries) == 1
+
+
+def test_session_store_new_key_unpersists_old_payload(spark, tmp_path):
+    """A call with a new fixture dir releases the old key's persisted
+    frames; clear() releases the current one."""
+    from spanner_jdbc_converter_spark.plans.registry import SessionStore, materialized
+
+    def cached(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+    # distinct plans per dir: identical plans would share one cache entry
+    store = SessionStore(
+        lambda spark, d: materialized(spark.range(len(d)).selectExpr(f"'{d}' AS dir"))
+    )
+    (old,) = store(spark, str(tmp_path / "a"))
+    assert cached(old)
+    (new,) = store(spark, str(tmp_path / "b"))
+    assert not cached(old)
+    assert cached(new)
+    assert list(store.entries) == [
+        (spark.sparkContext.applicationId, str(tmp_path / "b"))
+    ]
+    store.clear()
+    assert not cached(new) and store.entries == {}

@@ -99,6 +99,35 @@ def test_copy_skip_existing_is_noop_on_nonempty(spark, sf_dir, tmp_dest):
     assert spark.read.parquet(tmp_dest).count() == src.count()
 
 
+@pytest.mark.parametrize("mode", [ConvertMode.SKIP_EXISTING, ConvertMode.THROW_IF_EXISTS])
+def test_copy_fills_an_existing_empty_destination(spark, tmp_dest, mode):
+    """An existing zero-row table is empty, so both gates copy into it;
+    the write must not re-decide by path existence (which skipped the
+    write under SKIP_EXISTING and raised PATH_ALREADY_EXISTS under
+    THROW_IF_EXISTS)."""
+    spark.range(0).write.parquet(tmp_dest)
+    res = cp.copy_table(spark, spark.range(10), tmp_dest, mode)
+    assert res.record_count == 10
+    assert spark.read.parquet(tmp_dest).count() == 10
+
+
+def test_dest_state_probe(spark, tmp_dest):
+    """Missing path = absent; a directory without parquet files = an
+    existing empty table; a corrupt part file is an error, never
+    "absent" (which would let SKIP_EXISTING skip the table)."""
+    import os
+
+    assert cp._dest_state(spark, tmp_dest) == (False, True)
+    os.makedirs(tmp_dest)
+    assert cp._dest_state(spark, tmp_dest) == (True, True)
+    with open(os.path.join(tmp_dest, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        cp._dest_state(spark, tmp_dest)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        cp.copy_table(spark, spark.range(3), tmp_dest, ConvertMode.SKIP_EXISTING)
+
+
 def test_copy_drop_and_recreate_overwrites(spark, sf_dir, tmp_dest):
     src = load_table(spark, sf_dir, "orders")
     cp.copy_table(spark, src, tmp_dest, ConvertMode.SKIP_EXISTING)

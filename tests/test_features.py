@@ -280,9 +280,7 @@ class TestTriangleClosureSharing:
         from spanner_jdbc_converter_spark.plans import QUERIES
         from spanner_jdbc_converter_spark.plans import features as ft
 
-        for _e, pn in ft._TRI_STORE.values():
-            pn.unpersist()
-        ft._TRI_STORE.clear()
+        ft._tri_closure.clear()
         calls: list[int] = []
         real = gr._oriented_triangles
 
@@ -296,7 +294,7 @@ class TestTriangleClosureSharing:
         assert len(calls) == 1  # the one exact closure
         est_row = QUERIES["graph_triangle_estimate"](spark, sf_dir).first()
         assert len(calls) == 2  # + the sparsified closure ONLY
-        assert len(ft._TRI_STORE) == 1
+        assert len(ft._tri_closure.entries) == 1
         # the shared exact count is consistent with the per-node view:
         # Σ per-node participation = 3 × global triangle count
         total = (
@@ -371,10 +369,8 @@ class TestKCorePeel:
         from spanner_jdbc_converter_spark.plans import QUERIES
         from spanner_jdbc_converter_spark.plans import features as ft
 
-        for _e, pn in ft._TRI_STORE.values():
-            pn.unpersist()
-        ft._TRI_STORE.clear()
-        ft._EDGE_STORE.clear()
+        ft._tri_closure.clear()
+        ft._copurchase_pair_counts.clear()
         calls: list[int] = []
         real = ft._copurchase_pairs
 

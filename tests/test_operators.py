@@ -196,11 +196,6 @@ def test_extract_features_mapinpandas(spark, sf_dir):
         assert again[r["doc_id"]] == r["feature"]
 
 
-def test_decode_media_is_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        mm.decode_media(b"\x89PNG", "image/png")
-
-
 # -- portable hashing -------------------------------------------------------
 
 
@@ -1936,6 +1931,21 @@ def test_overlapped_checkpoints_match_sequential(spark):
         assert "Scan ExistingRDD" in chk._jdf.queryExecution().executedPlan().toString()
     (only,) = _stage_checkpoints_overlapped(a)
     assert only.count() == 100
+
+
+def test_overlapped_checkpoints_report_every_failure(spark):
+    """When several overlapped frames fail, the raised error names all
+    of them, not only the first to finish."""
+    from spanner_jdbc_converter_spark.operators.dedup import (
+        _stage_checkpoints_overlapped,
+    )
+
+    a = spark.range(1).select(F.raise_error(F.lit("overlap-boom-a")))
+    b = spark.range(1).select(F.raise_error(F.lit("overlap-boom-b")))
+    with pytest.raises(Exception) as info:
+        _stage_checkpoints_overlapped(a, b)
+    text = str(info.value) + "\n".join(getattr(info.value, "__notes__", []))
+    assert "overlap-boom-a" in text and "overlap-boom-b" in text
 
 
 # -- bigram surprisal + hard negatives ---------------------------------------

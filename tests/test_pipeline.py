@@ -117,13 +117,13 @@ def test_pipeline_entries_share_one_execution(spark, sf_dir):
     report frame's counts equal the shared store's counts."""
     from spanner_jdbc_converter_spark.plans import etl
 
-    etl._PIPELINE_STORE.clear()
+    etl._curated.clear()
     packed = etl.pipeline_curate_documents(spark, sf_dir)
-    assert len(etl._PIPELINE_STORE) == 1
+    assert len(etl._curated.entries) == 1
     report = etl.pipeline_curate_report(spark, sf_dir)
     inv = etl.pipeline_pack_invariants(spark, sf_dir)
-    assert len(etl._PIPELINE_STORE) == 1  # no second execution
-    stages = dict(etl._PIPELINE_STORE.popitem()[1][1])
+    assert len(etl._curated.entries) == 1  # no second execution
+    stages = dict(etl._curated.entries.popitem()[1][1])
     got = {r.stage: r.n_rows for r in report.collect()}
     assert got == stages
     # the invariants frame aggregates the SAME packed frame
