@@ -41,24 +41,26 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _run_with_timeout(spark, fn, timeout_s: float) -> tuple[bool, str | None]:
-    """Run fn() on a worker thread; cancel all Spark jobs on timeout."""
+def _run_with_timeout(spark, fn, timeout_s: float, group: str) -> tuple[bool, str | None]:
+    """Run fn() on a worker thread under its own Spark job group; on
+    timeout cancel that group's jobs, including any it submits later,
+    and join the thread so no abandoned entry keeps running."""
+    sc = spark.sparkContext
     err: list[str] = []
-    done = threading.Event()
 
     def work():
+        sc.setJobGroup(group, group, interruptOnCancel=True)
         try:
             fn()
         except Exception as exc:  # noqa: BLE001 - recorded, not raised
             err.append(str(exc))
-        finally:
-            done.set()
 
     t = threading.Thread(target=work, daemon=True)
     t.start()
-    if not done.wait(timeout_s):
-        spark.sparkContext.cancelAllJobs()
-        done.wait(30)
+    t.join(timeout_s)
+    if t.is_alive():
+        sc._jsc.sc().cancelJobGroupAndFutureJobs(group)
+        t.join()
         return False, f"timeout > {timeout_s}s (jobs cancelled)"
     return (not err), (err[0] if err else None)
 
@@ -115,7 +117,7 @@ def main() -> None:
 
     # Session-cache warm-up pre-pass (VERDICT r14 "Next round #1"): build
     # every (appId, sf_dir)-keyed shared store (plans/registry.py
-    # CACHE_PRIMERS — _curated, PQ/residual codebooks, span/winnow/group
+    # SESSION_STORES — _curated, PQ/residual codebooks, span/winnow/group
     # frames, BPE/unigram vocab frames, signature state) BEFORE the timed
     # loop, so no timed entry ever pays another entry's cache build and the
     # record is registry-position-independent.  Also runs for
@@ -171,7 +173,10 @@ def main() -> None:
         for i in range(BENCH_RUNS):
             start = time.perf_counter()
             ok, reason = _run_with_timeout(
-                spark, lambda name=name: _force(QUERIES[name](spark, sf_dir)), QUERY_TIMEOUT_S
+                spark,
+                lambda name=name: _force(QUERIES[name](spark, sf_dir)),
+                QUERY_TIMEOUT_S,
+                group=f"bench-{name}-{i}",
             )
             if not ok:
                 failed = reason

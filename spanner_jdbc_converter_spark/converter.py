@@ -18,9 +18,12 @@ Sequencing per run:
    strategy probe (single-statement vs ranged, W6) the deleter would
    pick.  Over parquet the physical delete IS the overwrite write.
 4. **Copy phase** per ``data_mode`` through the existence/emptiness
-   matrix (:func:`spanner_jdbc_converter_spark.copy.copy_table`).
+   gate (:func:`spanner_jdbc_converter_spark.modes.should_copy_data`).
 
-Destinations are parquet directories ``{dest_root}/{table}.parquet`` —
+:func:`_convert_phases` makes these decisions for both sinks from one
+probe of the destination; the sinks only supply it and write.
+
+Parquet destinations are directories ``{dest_root}/{table}.parquet`` —
 the same layout the fixture tables use, so a converted tree is
 immediately loadable by ``catalog.load_table``.  Every phase is a Spark
 job over partitioned data; the orchestration loop itself touches only
@@ -30,9 +33,13 @@ reference's driver thread.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spanner_jdbc_converter_spark.catalog import (
     PRIMARY_KEYS,
@@ -41,13 +48,14 @@ from spanner_jdbc_converter_spark.catalog import (
 )
 from spanner_jdbc_converter_spark.copy import (
     ConversionResult,
-    TableExistsError,
     _dest_state,
+    actual_row_bytes_expr,
     copy_table,
+    write_jdbc,
 )
 from spanner_jdbc_converter_spark.ddl import create_table_ddl, drop_table_ddl
 from spanner_jdbc_converter_spark.delete import delete_strategy
-from spanner_jdbc_converter_spark.modes import ConvertMode, should_copy_data
+from spanner_jdbc_converter_spark.modes import ConvertMode, refuse_existing, should_copy_data
 from spanner_jdbc_converter_spark.types import table_spec_from_schema
 
 
@@ -65,6 +73,61 @@ class TableConversionReport:
     result: ConversionResult = field(default_factory=ConversionResult)
 
 
+def _convert_phases(
+    table: str,
+    schema: T.StructType,
+    destination: str,
+    state: tuple[bool, bool],
+    count_rows: Callable[[], int],
+    write: Callable[[], ConversionResult],
+    ddl_mode: ConvertMode,
+    data_mode: ConvertMode,
+    dialect: str,
+    primary_key: list[str] | None,
+    type_overrides: dict[str, str] | None,
+) -> TableConversionReport:
+    """DDL → delete-probe → copy for one table, whatever the sink
+    (REF/Converter.java:69-83).  ``state`` is the destination's
+    ``(exists, empty)``, probed once by the sink; ``count_rows`` is
+    called only to size the delete; ``write`` replaces the destination
+    with the source and is called only if the table is copied."""
+    report = TableConversionReport(table=table)
+    exists, empty = state
+
+    # -- DDL phase (REF/ddl/TableConverter.java:176-204) --------------------
+    dropped = False
+    if ddl_mode is not ConvertMode.SKIP_ALL:
+        refuse_existing(ddl_mode, empty, destination)
+        pk = primary_key if primary_key is not None else list(PRIMARY_KEYS.get(table, ()))
+        spec = table_spec_from_schema(table, schema, pk)
+        if not exists:
+            report.ddl_action = "created"
+            report.ddl = [create_table_ddl(spec, dialect, overrides=type_overrides)]
+        elif ddl_mode is ConvertMode.DROP_AND_RECREATE:
+            report.ddl_action = "dropped_and_recreated"
+            report.ddl = [
+                drop_table_ddl(table),
+                create_table_ddl(spec, dialect, overrides=type_overrides),
+            ]
+            dropped = empty = True  # the write below realizes the drop
+
+    # -- delete phase (REF/Converter.java:76-79) ----------------------------
+    if data_mode is ConvertMode.DROP_AND_RECREATE and not empty:
+        # The reference sizes the deleter off the destination row count
+        # (REF/data/TableDeleter.java:28-40); physically the replacing
+        # write below performs the delete.
+        report.delete_strategy = delete_strategy(count_rows())
+
+    # -- copy phase (REF/data/DataCopier.java:45-85) ------------------------
+    copy_mode = data_mode
+    if dropped and data_mode is not ConvertMode.SKIP_ALL:
+        copy_mode = ConvertMode.DROP_AND_RECREATE  # fresh table: always load
+    if should_copy_data(copy_mode, empty, destination):
+        report.result = write()
+        report.data_action = "copied"
+    return report
+
+
 def convert_table(
     spark: SparkSession,
     source: DataFrame,
@@ -77,48 +140,20 @@ def convert_table(
     target_partitions: int | None = None,
     type_overrides: dict[str, str] | None = None,
 ) -> TableConversionReport:
-    """One table through DDL → delete-probe → copy (REF/Converter.java:69-83).
+    """One table into a parquet destination through :func:`_convert_phases`.
 
     ``type_overrides`` is the properties file's
     ``TableConverter.specificColumnMapping.*`` surface (P7): keys are a
     bare column name or ``table.column`` (qualified wins, types.py)."""
-    report = TableConversionReport(table=table)
-    pk = primary_key if primary_key is not None else list(PRIMARY_KEYS.get(table, ()))
-    exists, empty = _dest_state(spark, dest_path)
-
-    # -- DDL phase (REF/ddl/TableConverter.java:176-204) --------------------
-    if ddl_mode is not ConvertMode.SKIP_ALL:
-        if exists and ddl_mode is ConvertMode.THROW_IF_EXISTS and not empty:
-            raise TableExistsError(dest_path)
-        spec = table_spec_from_schema(table, source.schema, pk)
-        if not exists:
-            report.ddl_action = "created"
-            report.ddl = [create_table_ddl(spec, dialect, overrides=type_overrides)]
-        elif ddl_mode is ConvertMode.DROP_AND_RECREATE:
-            report.ddl_action = "dropped_and_recreated"
-            report.ddl = [
-                drop_table_ddl(table),
-                create_table_ddl(spec, dialect, overrides=type_overrides),
-            ]
-            exists, empty = False, True  # overwrite write below realizes the drop
-
-    # -- delete phase (REF/Converter.java:76-79) ----------------------------
-    if data_mode is ConvertMode.DROP_AND_RECREATE and exists and not empty:
-        # The reference sizes the deleter off the destination row count
-        # (REF/data/TableDeleter.java:28-40); physically the overwrite
-        # write below performs the delete in the same job.
-        report.delete_strategy = delete_strategy(spark.read.parquet(dest_path).count())
-
-    # -- copy phase (REF/data/DataCopier.java:45-85) ------------------------
-    copy_mode = data_mode
-    if report.ddl_action == "dropped_and_recreated" and data_mode is not ConvertMode.SKIP_ALL:
-        copy_mode = ConvertMode.DROP_AND_RECREATE  # fresh table: always load
-    will_copy = should_copy_data(copy_mode, empty)
-    report.result = copy_table(
-        spark, source, dest_path, mode=copy_mode, target_partitions=target_partitions
+    return _convert_phases(
+        table, source.schema, dest_path, _dest_state(spark, dest_path),
+        count_rows=lambda: spark.read.parquet(dest_path).count(),
+        write=lambda: copy_table(
+            spark, source, dest_path, ConvertMode.DROP_AND_RECREATE, target_partitions
+        ),
+        ddl_mode=ddl_mode, data_mode=data_mode, dialect=dialect,
+        primary_key=primary_key, type_overrides=type_overrides,
     )
-    report.data_action = "copied" if will_copy else "skipped"
-    return report
 
 
 def _jdbc_connection(spark: SparkSession, url: str, driver: str | None = None):
@@ -199,79 +234,42 @@ def convert_table_jdbc(
     type_overrides: dict[str, str] | None = None,
 ) -> TableConversionReport:
     """One table into a live JDBC destination — the reference's actual
-    shape (JDBC→JDBC), same phase sequencing as :func:`convert_table`:
-    existence via DatabaseMetaData, emptiness probe, DDL per ddl_mode,
-    delete-strategy probe, cost-model-batched parallel write.
+    shape (JDBC→JDBC) — through :func:`_convert_phases`: existence via
+    DatabaseMetaData, a one-row emptiness probe, a pushed COUNT(*) for
+    the delete strategy, and the cost-model-batched parallel write.
 
     The recorded DDL is what the dialect generator emits for the
     destination; the physical CREATE rides Spark's JDBC writer (which
     derives column types from the frame), keeping the copy path on the
-    batched parallel sink.  Metrics come from an explicit prepare-phase
-    aggregation over the source (observed metrics don't surface from the
-    JDBC writer's per-partition path) — the same prepare/execute split
-    the reference runs (X3: COUNT + partition planning, then upload,
-    REF/data/AbstractTableWorker.java:68-93)."""
-    from pyspark.sql import functions as F
-
-    from spanner_jdbc_converter_spark.copy import actual_row_bytes_expr, write_jdbc
-
-    report = TableConversionReport(table=table)
-    pk = primary_key if primary_key is not None else list(PRIMARY_KEYS.get(table, ()))
-    existing = {t.upper() for t in list_jdbc_tables(spark, url, driver)}
-    exists = table.upper() in existing
+    batched parallel sink."""
+    exists = table.upper() in {t.upper() for t in list_jdbc_tables(spark, url, driver)}
     # one-row probe, never a Spark-side scan (jdbc_table_nonempty docstring)
     empty = not (exists and jdbc_table_nonempty(spark, url, table, driver))
 
-    # -- DDL phase ----------------------------------------------------------
-    if ddl_mode is not ConvertMode.SKIP_ALL:
-        if exists and ddl_mode is ConvertMode.THROW_IF_EXISTS and not empty:
-            raise TableExistsError(f"{url}::{table}")
-        spec = table_spec_from_schema(table, source.schema, pk)
-        if not exists:
-            report.ddl_action = "created"
-            report.ddl = [create_table_ddl(spec, dialect, overrides=type_overrides)]
-        elif ddl_mode is ConvertMode.DROP_AND_RECREATE:
-            report.ddl_action = "dropped_and_recreated"
-            report.ddl = [
-                drop_table_ddl(table),
-                create_table_ddl(spec, dialect, overrides=type_overrides),
-            ]
-            exists, empty = False, True  # the overwrite write realizes the drop
-
-    # -- delete phase (REF/Converter.java:76-79) ----------------------------
-    if data_mode is ConvertMode.DROP_AND_RECREATE and exists and not empty:
-        # the only consumer of the exact count: sizing the delete strategy
-        # (REF/data/TableDeleter.java:28-40) — pushed COUNT(*), one row back
-        report.delete_strategy = delete_strategy(jdbc_count(spark, url, table, driver))
-
-    # -- copy phase ---------------------------------------------------------
-    copy_mode = data_mode
-    if report.ddl_action == "dropped_and_recreated" and data_mode is not ConvertMode.SKIP_ALL:
-        copy_mode = ConvertMode.DROP_AND_RECREATE
-    if copy_mode is ConvertMode.THROW_IF_EXISTS and exists and not empty:
-        # mirror copy_table (copy.py) so the parquet and JDBC orchestrators
-        # agree on every cell of the mode × existence/emptiness matrix
-        raise TableExistsError(f"{url}::{table}")
-    will_copy = should_copy_data(copy_mode, empty)
-    report.result = ConversionResult(start_time=__import__("time").time())
-    if will_copy:
-        # prepare phase: one aggregation pass for the metrics
+    def write() -> ConversionResult:
+        start = time.time()
+        # Prepare phase: one aggregation pass for the metrics, the
+        # reference's prepare/execute split (X3: COUNT + partition
+        # planning, then upload, REF/data/AbstractTableWorker.java:68-93).
+        # An Observation does not replace it: placed directly under the
+        # JDBC writer (Derby, numPartitions=2) it returned {'rows': 0,
+        # 'bytes': None} for customer, orders and lineitem at sf0.01
+        # (true 1,500 / 15,000 / 60,000 rows).  It counted only with a
+        # shuffle between it and the writer, which moves every row again.
         prep = source.agg(
             F.count(F.lit(1)).alias("rows"),
             F.sum(actual_row_bytes_expr(source.schema)).alias("bytes"),
         ).first()
-        # execute phase: the copy decision is already made (existence/
-        # emptiness matrix above), so the write always (re)places the table
-        write_jdbc(
-            source, url, table,
-            mode=ConvertMode.DROP_AND_RECREATE, driver=driver,
-            num_partitions=num_partitions,
-        )
-        report.result.record_count = prep["rows"] or 0
-        report.result.byte_count = prep["bytes"] or 0
-        report.data_action = "copied"
-    report.result.end_time = __import__("time").time()
-    return report
+        write_jdbc(source, url, table, driver=driver, num_partitions=num_partitions)
+        return ConversionResult(prep["rows"] or 0, prep["bytes"] or 0, start, time.time())
+
+    return _convert_phases(
+        table, source.schema, f"{url}::{table}", (exists, empty),
+        count_rows=lambda: jdbc_count(spark, url, table, driver),  # pushed COUNT(*)
+        write=write,
+        ddl_mode=ddl_mode, data_mode=data_mode, dialect=dialect,
+        primary_key=primary_key, type_overrides=type_overrides,
+    )
 
 
 def convert_all(

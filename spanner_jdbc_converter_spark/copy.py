@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spanner_jdbc_converter_spark.modes import ConvertMode, should_copy_data, to_save_mode
+from spanner_jdbc_converter_spark.modes import ConvertMode, should_copy_data
+from spanner_jdbc_converter_spark.modes import TableExistsError  # noqa: F401 - re-exported
 
 # Reference defaults (REF/cfg/ConverterConfiguration.java:180-244, README.md:26-28).
 DEFAULT_BATCH_BYTES = 1_500_000
@@ -198,7 +199,6 @@ def write_jdbc(
     df: DataFrame,
     url: str,
     table: str,
-    mode: ConvertMode = ConvertMode.DROP_AND_RECREATE,
     driver: str | None = None,
     num_partitions: int = DEFAULT_MAX_WORKERS,
 ) -> int:
@@ -207,16 +207,14 @@ def write_jdbc(
     as Spark's JDBC sink.  Each of ``num_partitions`` tasks opens one
     connection and batches ``batchsize`` rows per executeBatch, with the
     batch size from the same byte/mutation cost model the reference uses
-    (X6).  Returns the batch size used; ConvertMode maps onto SaveMode
-    exactly as in the parquet path (SKIP_ALL ⇒ no-op)."""
-    save_mode = to_save_mode(mode)
-    if save_mode is None:
-        return 0
+    (X6).  Returns the batch size used.  It always replaces the table:
+    whether to write is the caller's ConvertMode decision, and Spark's
+    "ignore"/"error" would skip or refuse an existing EMPTY table."""
     batch_rows = spanner_batch_rows(estimate_row_bytes(df.schema), len(df.columns))
     opts = jdbc_write_options(url, table, batch_rows, num_partitions)
     if driver:
         opts["driver"] = driver
-    df.write.format("jdbc").options(**opts).mode(save_mode).save()
+    df.write.format("jdbc").options(**opts).mode("overwrite").save()
     return batch_rows
 
 
@@ -245,10 +243,6 @@ def read_jdbc(
 # -- copy orchestration -----------------------------------------------------
 
 
-class TableExistsError(RuntimeError):
-    """ThrowExceptionIfExists semantics (REF/ddl/TableConverter.java:201-202)."""
-
-
 def _dest_state(spark: SparkSession, dest_path: str) -> tuple[bool, bool]:
     """(exists, empty) for a parquet destination.  A directory without
     parquet files is an existing empty table; any other read failure,
@@ -274,8 +268,11 @@ def copy_table(
     mode: ConvertMode = ConvertMode.SKIP_EXISTING,
     target_partitions: int | None = None,
 ) -> ConversionResult:
-    """One table through the ConvertMode × existence/emptiness matrix
+    """One table through the ConvertMode × existence/emptiness gate
     (REF/data/DataCopier.java:45-85), writing parquet.
+
+    Only SKIP_EXISTING and THROW_IF_EXISTS decide from the destination,
+    so only they probe it.
 
     The reference's phase-1 "prepare" (COUNT + partition planning) is
     Spark's job planning; phase-2 "execute" is the write job.  Counting
@@ -283,10 +280,9 @@ def copy_table(
     passes over the data.
     """
     result = ConversionResult(start_time=time.time())
-    exists, empty = _dest_state(spark, dest_path)
-    if mode is ConvertMode.THROW_IF_EXISTS and exists and not empty:
-        raise TableExistsError(dest_path)
-    if not should_copy_data(mode, empty):
+    reads_dest = mode in (ConvertMode.SKIP_EXISTING, ConvertMode.THROW_IF_EXISTS)
+    empty = _dest_state(spark, dest_path)[1] if reads_dest else True
+    if not should_copy_data(mode, empty, dest_path):
         result.end_time = time.time()
         return result
 

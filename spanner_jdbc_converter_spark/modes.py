@@ -1,9 +1,11 @@
-"""ConvertMode semantics (SURVEY.md §1.5) → Spark SaveMode.
+"""ConvertMode semantics (SURVEY.md §1.5) and the one gate that applies
+them to a destination.
 
 The reference applies ``ConvertMode = {SkipAll, SkipExisting,
 DropAndRecreate, ThrowExceptionIfExists}`` independently to the DDL and
 data phases (REF/ConvertMode.java:3-6,
-REF/cfg/ConverterConfiguration.java:160-178).
+REF/cfg/ConverterConfiguration.java:160-178).  Each phase is decided
+once from one destination probe; no mode reaches a Spark ``SaveMode``.
 """
 
 from __future__ import annotations
@@ -18,26 +20,23 @@ class ConvertMode(enum.Enum):
     THROW_IF_EXISTS = "ThrowExceptionIfExists"
 
 
-#: ConvertMode → DataFrameWriter mode string (SURVEY.md §1.5 table).
-_SAVE_MODE = {
-    ConvertMode.SKIP_ALL: None,  # phase skipped entirely (REF/Converter.java:72)
-    ConvertMode.SKIP_EXISTING: "ignore",
-    ConvertMode.DROP_AND_RECREATE: "overwrite",
-    ConvertMode.THROW_IF_EXISTS: "error",
-}
+class TableExistsError(RuntimeError):
+    """ThrowExceptionIfExists semantics (REF/ddl/TableConverter.java:201-202)."""
 
 
-def to_save_mode(mode: ConvertMode) -> str | None:
-    """None ⇒ the whole phase is a no-op."""
-    return _SAVE_MODE[mode]
+def refuse_existing(mode: ConvertMode, destination_empty: bool, destination: str) -> None:
+    """ThrowExceptionIfExists refuses a destination that holds rows; an
+    absent or empty one is created or filled like SkipExisting."""
+    if mode is ConvertMode.THROW_IF_EXISTS and not destination_empty:
+        raise TableExistsError(destination)
 
 
-def should_copy_data(mode: ConvertMode, destination_empty: bool) -> bool:
+def should_copy_data(mode: ConvertMode, destination_empty: bool, destination: str) -> bool:
     """Data-phase gate: SkipExisting copies only into empty destinations
     (README.md:17-18); DropAndRecreate always copies (after delete);
-    ThrowExceptionIfExists copies only when empty (else the DDL phase threw)."""
+    ThrowExceptionIfExists copies into an empty destination and raises
+    on any other."""
+    refuse_existing(mode, destination_empty, destination)
     if mode is ConvertMode.SKIP_ALL:
         return False
-    if mode is ConvertMode.DROP_AND_RECREATE:
-        return True
-    return destination_empty
+    return mode is ConvertMode.DROP_AND_RECREATE or destination_empty

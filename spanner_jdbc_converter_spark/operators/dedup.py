@@ -27,6 +27,7 @@ from spanner_jdbc_converter_spark.operators.text import (
     tokens,
     word_ngrams,
 )
+from spanner_jdbc_converter_spark.session import SESSION_CONF_LOCK
 
 # MinHash defaults: 16 hashes in 4 bands of 4 — catches Jaccard ≳ 0.5
 # candidates with high probability (1-(1-s^4)^4).
@@ -457,6 +458,49 @@ def _stats_reset_checkpoint(df: DataFrame) -> DataFrame:
         return out
 
 
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star then small-star round of :func:`connected_groups`
+    over larger-first edges ``(a, b)``, ``a > b``, as one plan."""
+    # large-star needs the full neighborhood of every node: explode
+    # the canonical edges into both orientations (one scan, no join)
+    sym = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+                F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v")
+    lmins = sym.groupBy("u").agg(F.min("v").alias("mv"))
+    large = (
+        sym.filter(F.col("v") > F.col("u"))
+        .join(lmins, "u")
+        .select(
+            F.col("v").alias("a"),
+            F.least(F.col("mv"), F.col("u")).alias("b"),  # m = min(N(u) ∪ {u})
+        )
+        .distinct()
+    )
+    # small-star rides the SAME round plan: key = the larger endpoint,
+    # neighborhood all smaller; both consumers of `large` reuse its
+    # input exchanges
+    smins = large.groupBy("a").agg(F.min("b").alias("m"))
+    return (
+        large.join(smins, "a")
+        .select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("b").alias("x"), F.col("m").alias("y")),
+                    F.struct(F.col("a").alias("x"), F.col("m").alias("y")),
+                )
+            ).alias("e")
+        )
+        .select(F.col("e.x").alias("a"), F.col("e.y").alias("b"))
+        .filter(F.col("a") != F.col("b"))  # (b,m) with b == m is a self-loop
+        .distinct()
+    )
+
+
 def connected_groups(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -501,13 +545,16 @@ def connected_groups(
     (hashed) ids, where a merge could otherwise remove a negative term
     and mask a rewrite.
 
-    One probe per ROUND suffices (optimization r18, VERDICT r17 "Next
-    round #5" — it halves the per-round checkpoint barriers): the
-    distinct-edge COUNT is non-increasing through EACH phase (every
-    input edge maps to exactly one output edge pre-dedup, distinct only
-    shrinks), so end-of-round count unchanged ⟹ the mid-round count was
-    unchanged too (squeeze) ⟹ neither phase merged ⟹ both phases' sum
-    deltas are pure rewrite deltas ≤ 0, and end-of-round sum unchanged
+    One probe per ROUND suffices (it halves the per-round checkpoint
+    barriers): the distinct-edge COUNT is non-increasing through EACH
+    phase.  Large-star maps each input edge to one output row.
+    Small-star explodes each edge into two rows, so its bound holds per
+    key only after within-key dedup: key u with k smaller neighbors
+    emits k−1 distinct (v_i, m) edges (the self-loop (m, m) dropped)
+    plus k copies of (u, m), k distinct edges for k in; distinct across
+    keys only shrinks that.  So end-of-round count unchanged ⟹ the
+    mid-round count was unchanged too (squeeze) ⟹ neither phase merged
+    ⟹ both phases' sum deltas are pure rewrite deltas ≤ 0, and end-of-round sum unchanged
     squeezes the mid-round sum as well: (sum, count) preserved across
     the ROUND ⟹ preserved across BOTH phases ⟹ joint fixpoint — the
     identical condition the two-probe form tested, at half the
@@ -523,12 +570,13 @@ def connected_groups(
     round) with the stats reset of :func:`_stats_reset_checkpoint`; on
     a real cluster prefer setCheckpointDir + checkpoint() for fault
     tolerance.  The large-star frame feeds two consumers inside one
-    round plan (the small-star min and the rewrite join, both keyed on
-    ``a``) — its distinct's exchange is planned once and reused
-    (ReusedExchange; the round plan is checked in tests), so fusing
-    does not recompute the phase.  Every step is a shuffle-partitioned
-    join/aggregate — no driver-side graph; min over ids, no floats,
-    fully deterministic.
+    round plan (:func:`_star_round`: the small-star min and the rewrite
+    join); both reuse large-star's two input exchanges (ReusedExchange,
+    pinned by tests/test_operators.py::test_star_round_reuses_the_large_star_exchanges)
+    and the min side needs no distinct (min ignores duplicates), so
+    fusing re-runs only large-star's narrow join, never its shuffles.
+    Every step is a shuffle-partitioned join/aggregate — no driver-side
+    graph; min over ids, no floats, fully deterministic.
 
     Output: (doc_id, group_id) for every node appearing in ``pairs``."""
     from pyspark.sql import Observation
@@ -560,45 +608,7 @@ def connected_groups(
     )
     nodes = edges.select(F.explode(F.array("a", "b")).alias("doc_id")).distinct()
     for i in range(max_iters):
-        # large-star needs the full neighborhood of every node: explode
-        # the canonical edges into both orientations (one scan, no join)
-        sym = edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-                    F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-                )
-            ).alias("e")
-        ).select("e.u", "e.v")
-        lmins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-        large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(lmins, "u")
-            .select(
-                F.col("v").alias("a"),
-                F.least(F.col("mv"), F.col("u")).alias("b"),  # m = min(N(u) ∪ {u})
-            )
-            .distinct()
-        )
-        # small-star rides the SAME round plan (fused, r18): key = the
-        # larger endpoint, neighborhood all smaller; both consumers of
-        # `large` are keyed on `a`, sharing its exchange
-        smins = large.groupBy("a").agg(F.min("b").alias("m"))
-        small = (
-            large.join(smins, "a")
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("b").alias("x"), F.col("m").alias("y")),
-                        F.struct(F.col("a").alias("x"), F.col("m").alias("y")),
-                    )
-                ).alias("e")
-            )
-            .select(F.col("e.x").alias("a"), F.col("e.y").alias("b"))
-            .filter(F.col("a") != F.col("b"))  # (b,m) with b == m is a self-loop
-            .distinct()
-        )
-        edges, sum_s = _ckpt(small)
+        edges, sum_s = _ckpt(_star_round(edges))
         if sum_s == prev_sum:
             _LAST_CC_ROUNDS = i + 1
             break
@@ -1823,7 +1833,11 @@ def _stage_checkpoints_overlapped(
     would escape any job group/tag/scheduler pool the caller set —
     breaking cancellation scoping and FAIR-pool attribution (results
     were never affected).  InheritableThread copies the caller's local
-    properties at construction and cleans them up on exit."""
+    properties at construction and cleans them up on exit.
+
+    The calling thread holds SESSION_CONF_LOCK while the threads run,
+    so a :func:`~spanner_jdbc_converter_spark.session.planning_scale_rounds`
+    scope on another thread cannot switch AQE off under these jobs."""
     if len(dfs) == 1:
         return (_stage_checkpoint(dfs[0], reliable),)
     from pyspark import InheritableThread
@@ -1840,10 +1854,11 @@ def _stage_checkpoints_overlapped(
     threads = [
         InheritableThread(target=_run, args=(i, df)) for i, df in enumerate(dfs)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    with SESSION_CONF_LOCK:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
     if errors:
         # keep the first error's type for callers' except clauses, but
         # surface every failed frame, not just the first

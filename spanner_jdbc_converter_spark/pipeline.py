@@ -18,11 +18,10 @@ fingerprints, budget respected, splits partitioning the selection, and
 bin fills bounded by capacity.
 
 Scale notes: stages communicate only through DataFrames (one logical
-plan until the report forces counts); filters are narrow; both dedups
-shuffle on hash keys; selection uses the banded prefix sum; packing
-shards on the composite (lang, hash) key.  The stage counts in the
-report each trigger a job — at 100 TB, pass ``with_counts=False`` to
-skip them and keep the whole pipeline one lazy plan.
+plan); filters are narrow; both dedups shuffle on hash keys; selection
+uses the banded prefix sum; packing shards on the composite (lang, hash)
+key.  The stage counts in the report are observed metrics, so they add
+no Spark job: they ride the one action that materializes the pipeline.
 """
 
 from __future__ import annotations
@@ -40,17 +39,13 @@ from spanner_jdbc_converter_spark.operators import text as tx
 
 @dataclass
 class PipelineReport:
-    """Row counts after each stage (empty when ``with_counts=False``).
+    """Row counts after each stage.
 
-    Two counting modes:
-    * eager (``with_counts=True``): ``record`` counts each stage as the
-      pipeline builds — one Spark job per stage, counts available
-      immediately.
-    * lazy (``with_counts="lazy"``): ``observe`` attaches a COUNT
-      metric to each stage frame instead; every count then rides the
-      ONE action that materializes the pipeline (no extra jobs — the
-      observed nodes are already in the executed plan).  Call
-      ``resolve()`` after that action to populate ``stages``.
+    ``observe`` attaches a COUNT metric to each stage frame; every count
+    rides the ONE action that materializes the pipeline (no extra jobs —
+    the observed nodes are already in the executed plan).  That action
+    must compute every partition: a ``limit`` would observe part of a
+    stage.  Call ``resolve()`` after it to populate ``stages``.
     ``persisted`` collects the stage frames cached by curate_documents
     so a caller that fully consumed the pipeline can release them.
     """
@@ -59,24 +54,26 @@ class PipelineReport:
     persisted: list[DataFrame] = field(default_factory=list)
     _pending: list = field(default_factory=list)
 
-    def record(self, name: str, df: DataFrame, enabled: bool) -> None:
-        if enabled:
-            self.stages[name] = df.count()
-
     def observe(self, name: str, df: DataFrame) -> DataFrame:
         """Wrap ``df`` with a row-count observation; the RETURNED frame
         must be the one consumed downstream or the metric never fires."""
         from pyspark.sql import Observation
 
         obs = Observation()
-        self._pending.append((name, obs))
+        self._pending.append((name, obs, df))
         return df.observe(obs, F.count(F.lit(1)).alias("n"))
 
     def resolve(self) -> None:
         """Read all pending observations (blocks until the action that
-        materialized the pipeline has completed them)."""
-        for name, obs in self._pending:
-            self.stages[name] = obs.get["n"]
+        materialized the pipeline has completed them).
+
+        A stage that no executed plan ran leaves its observation
+        unfired (on an empty input the first four do not fire); such a
+        stage is counted directly."""
+        for name, obs, df in self._pending:
+            # obs.get raises on the empty row of an unfired observation
+            fired = obs._jo.getRow().length() > 0
+            self.stages[name] = obs.get["n"] if fired else df.count()
         self._pending.clear()
 
     def release(self) -> None:
@@ -110,72 +107,47 @@ def curate_documents(
     token_budget: int = 50_000,
     pack_capacity: int = 512,
     pack_shards: int = 16,
-    with_counts: bool | str = True,
-    persist_stages: bool = True,
 ) -> tuple[DataFrame, PipelineReport]:
     """Run the full curation pipeline; returns (packed frame, report).
 
     The packed frame has one row per selected document with its split
     assignment and packing coordinates: (lang, split, shard, doc_id,
-    n_tokens, bin_idx, bin_fill).
+    n_tokens, bin_idx, bin_fill).  Run one action on it, then call
+    ``report.resolve()`` for the per-stage counts (see PipelineReport).
 
-    ``with_counts``: True = eager per-stage count jobs; ``"lazy"`` =
-    every stage count rides the ONE action that materializes the
-    pipeline as an observed metric (call ``report.resolve()`` after
-    that action — see PipelineReport); False = no counts, fully lazy.
-
-    ``persist_stages`` caches the multiply-consumed stage frames
+    The multiply-consumed stage frames are cached with MEMORY_AND_DISK
     (``exact`` feeds both the LSH pair generation and the survivor
     join; ``near`` feeds the overlap probe, the decontamination filter,
-    and selection) with MEMORY_AND_DISK — without it the lazy plan
-    re-derives the tokenizer/fingerprint subtree once per consumer.
-    Disk-backed, so safe at scale; disable to keep the pipeline one
-    fully lazy plan with zero cached state.  In lazy-counts mode the
+    and selection): without it the lazy plan re-derives the
+    tokenizer/fingerprint subtree once per consumer.  Disk-backed, so
+    safe at scale.  The cache is also what makes each count exact: the
     observation wraps each frame BEFORE its persist, so the metric node
     lives inside the cached plan and fires exactly once (block-level
     cache locking computes each cached partition once even with
-    concurrent consumers).
+    concurrent consumers); uncached, a frame consumed by several
+    branches would re-plan its CollectMetrics subtree per consumer.
     """
     from pyspark import StorageLevel
 
-    lazy_counts = with_counts == "lazy"
-    if lazy_counts and not persist_stages:
-        # The observed stage frames are consumed by MULTIPLE downstream
-        # branches (near_dedup feeds the overlap probe, the decontamination
-        # filter, AND selection); without the cache each CollectMetrics
-        # subtree would be re-planned per consumer and the "fires exactly
-        # once" guarantee below would not hold — counts could double or the
-        # duplicated observation could fail analysis.
-        raise ValueError(
-            "with_counts='lazy' requires persist_stages=True: the lazy "
-            "observation metrics rely on the stage cache to fire exactly once"
-        )
+    report = PipelineReport()
 
     def staged(df: DataFrame) -> DataFrame:
-        if not persist_stages:
-            return df
         out = df.persist(StorageLevel.MEMORY_AND_DISK)
         report.persisted.append(out)
         return out
 
-    def rec(name: str, df: DataFrame) -> DataFrame:
-        """Count hook: returns the frame downstream MUST consume."""
-        if lazy_counts:
-            return report.observe(name, df)
-        report.record(name, df, bool(with_counts))
-        return df
-
-    report = PipelineReport()
-    docs = rec("input", docs)
+    docs = report.observe("input", docs)
 
     # 1. profile: token/quality/lang features from ONE staged tokenizer.
     profiled = tx.document_profile(docs, text_col)
     # The profile features (tokenizer, quality, fingerprint) feed every
     # later stage — persist once here so no stage re-tokenizes.
-    flt = staged(rec("quality_filter", profiled.filter(F.col("quality") >= quality_min)))
+    flt = staged(
+        report.observe("quality_filter", profiled.filter(F.col("quality") >= quality_min))
+    )
 
     # 2. exact dedup on normalized-content fingerprint (min-id keeper).
-    exact = staged(rec("exact_dedup", dd.fingerprint_dedup(flt, text_col, id_col)))
+    exact = staged(report.observe("exact_dedup", dd.fingerprint_dedup(flt, text_col, id_col)))
 
     # 3. near-dedup: LSH candidates → connected components → keep the
     #    min-id representative of every near-dup group.
@@ -184,7 +156,7 @@ def curate_documents(
     losers = groups.filter(F.col("doc_id") != F.col("group_id")).select(
         F.col("doc_id").alias(id_col)
     )
-    near = staged(rec("near_dedup", exact.join(losers, id_col, "left_anti")))
+    near = staged(report.observe("near_dedup", exact.join(losers, id_col, "left_anti")))
 
     # 4. decontamination: drop documents overlapping the benchmark set.
     if benchmark_pred is not None:
@@ -193,14 +165,14 @@ def curate_documents(
             F.col("overlap_frac") > overlap_max
         ).select(id_col)
         near = staged(
-            rec(
+            report.observe(
                 "decontaminated",
                 near.filter(~benchmark_pred).join(contaminated, id_col, "left_anti"),
             )
         )
 
     # 5. token-budget selection (quality DESC, id ASC — banded prefix sum).
-    selected = rec(
+    selected = report.observe(
         "token_budget",
         sel.select_token_budget(near, "quality", "n_tokens", id_col, token_budget),
     )
@@ -227,5 +199,5 @@ def curate_documents(
         "bin_idx",
         "bin_fill",
     )
-    out = rec("packed", out)
+    out = report.observe("packed", out)
     return out, report

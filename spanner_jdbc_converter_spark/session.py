@@ -21,6 +21,8 @@ config here is chosen to also be the right default on a large cluster:
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -54,7 +56,10 @@ def session_shuffle_width(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
-from contextlib import contextmanager
+#: Held while a thread flips session-global SQL conf (planning_scale_rounds)
+#: or runs jobs on other driver threads (dedup._stage_checkpoints_overlapped),
+#: so neither runs while the other is active; the holder may nest both.
+SESSION_CONF_LOCK = threading.RLock()
 
 
 @contextmanager
@@ -73,13 +78,15 @@ def planning_scale_rounds(spark: SparkSession):
     round job on the 64-dim fixture (×6-9 rounds per entry).  The scan
     stage underneath is unchanged — its split sizing does not come
     from AQE.  Data-scale pipelines (joins, banding, window passes)
-    keep AQE; this scope is only for the planning-scale recurrences."""
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+    keep AQE; this scope is only for the planning-scale recurrences.
+    The conf is session-global, hence SESSION_CONF_LOCK."""
+    with SESSION_CONF_LOCK:
+        old = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def get_spark(

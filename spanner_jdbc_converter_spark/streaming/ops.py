@@ -808,7 +808,6 @@ def upsert_stream_to_jdbc(
             f"order_col {order_col!r} not in stream columns {stream_df.columns}"
         )
     from spanner_jdbc_converter_spark.copy import write_jdbc
-    from spanner_jdbc_converter_spark.modes import ConvertMode
 
     ck_tag = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8].upper()
 
@@ -833,9 +832,9 @@ def upsert_stream_to_jdbc(
             finally:
                 conn.close()
         if table.lower() not in existing:
-            write_jdbc(batch, url, table, mode=ConvertMode.DROP_AND_RECREATE, driver=driver)
+            write_jdbc(batch, url, table, driver=driver)
             return
-        write_jdbc(batch, url, staging, mode=ConvertMode.DROP_AND_RECREATE, driver=driver)
+        write_jdbc(batch, url, staging, driver=driver)
         # Spark's JDBC writer emits table names UNQUOTED (the database
         # case-folds them) but COLUMN names quoted case-preserving — the
         # MERGE must match both conventions or lookups miss.

@@ -4,10 +4,13 @@ probe → copy, across the ConvertMode matrix."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from spanner_jdbc_converter_spark.catalog import load_table
 from spanner_jdbc_converter_spark.converter import convert_all
+from spanner_jdbc_converter_spark.copy import DERBY_EMBEDDED_DRIVER as DERBY
 from spanner_jdbc_converter_spark.copy import TableExistsError
 from spanner_jdbc_converter_spark.modes import ConvertMode
 
@@ -179,3 +182,109 @@ def test_spanner_vs_postgres_pk_placement(spark, sf_dir, tmp_path):
         ddl_by_dialect[dialect] = r.ddl[0]
     assert ddl_by_dialect["cloudspanner"].endswith("PRIMARY KEY (r_regionkey)")
     assert "PRIMARY KEY (r_regionkey))" in ddl_by_dialect["postgresql"]
+
+
+# -- one phase machine, two sinks --------------------------------------------
+
+MODES = list(ConvertMode)
+#: Destination state → rows it holds before the conversion (None: absent).
+STATES = {"absent": None, "empty": 0, "nonempty": 2}
+
+
+@pytest.fixture(scope="module")
+def derby_url(tmp_path_factory):
+    """One embedded Derby database for the whole matrix; cells use
+    distinct table names."""
+    return f"jdbc:derby:{tmp_path_factory.mktemp('matrix')}/db;create=true"
+
+
+def _jdbc_execute(spark, url, *statements):
+    from spanner_jdbc_converter_spark.converter import _jdbc_connection
+
+    conn = _jdbc_connection(spark, url, DERBY)
+    try:
+        st = conn.createStatement()
+        for sql in statements:
+            st.executeUpdate(sql)
+    finally:
+        conn.close()
+
+
+def _outcome(convert):
+    """(ddl_action, delete_strategy, data_action) or "raised"."""
+    try:
+        r = convert()
+    except TableExistsError:
+        return "raised"
+    return r.ddl_action, r.delete_strategy, r.data_action
+
+
+@pytest.mark.parametrize("data_mode", MODES, ids=lambda m: m.name)
+@pytest.mark.parametrize("ddl_mode", MODES, ids=lambda m: m.name)
+def test_sinks_agree_on_every_convert_mode_cell(
+    spark, sf_dir, tmp_path, derby_url, ddl_mode, data_mode
+):
+    """Every ddl_mode × data_mode cell against an absent, an empty and a
+    non-empty destination gives the same report, the same raise-or-not
+    and the same final row count on the parquet sink and on a live
+    JDBC database, and a destination changes only when it is copied."""
+    from spanner_jdbc_converter_spark.converter import (
+        convert_table,
+        convert_table_jdbc,
+        jdbc_count,
+        list_jdbc_tables,
+    )
+
+    source = load_table(spark, sf_dir, "region")
+    n_source = source.count()
+    for state, before in STATES.items():
+        path = str(tmp_path / f"{state}.parquet")
+        name = f"m_{ddl_mode.name}_{data_mode.name}_{state}"
+        if before is not None:
+            spark.range(before).write.parquet(path)
+            _jdbc_execute(
+                spark, derby_url, f"CREATE TABLE {name} (id BIGINT)",
+                *(f"INSERT INTO {name} VALUES ({i})" for i in range(before)),
+            )
+        modes = dict(ddl_mode=ddl_mode, data_mode=data_mode, dialect="postgresql")
+        parquet = _outcome(lambda: convert_table(spark, source, "region", path, **modes))
+        jdbc = _outcome(
+            lambda: convert_table_jdbc(
+                spark, source, name, derby_url, driver=DERBY,
+                primary_key=["r_regionkey"], **modes,
+            )
+        )
+        assert parquet == jdbc, state
+
+        parquet_rows = spark.read.parquet(path).count() if os.path.exists(path) else None
+        jdbc_rows = (
+            jdbc_count(spark, derby_url, name, DERBY)
+            if name.upper() in list_jdbc_tables(spark, derby_url, DERBY)
+            else None
+        )
+        assert parquet_rows == jdbc_rows, state
+        copied = parquet != "raised" and parquet[2] == "copied"
+        assert parquet_rows == (n_source if copied else before), state
+
+
+def test_drop_and_recreate_probes_each_destination_once(spark, sf_dir, tmp_path, monkeypatch):
+    """A DROP_AND_RECREATE pass over existing tables reads each
+    destination's state once: the converter decides, the copy only
+    writes."""
+    from spanner_jdbc_converter_spark import converter, copy
+
+    dest = str(tmp_path / "dest")
+    convert_all(spark, sf_dir, dest, TABLES)
+    probed = []
+    for module in (converter, copy):
+        real = module._dest_state
+
+        def counted(spark, path, real=real):
+            probed.append(path)
+            return real(spark, path)
+
+        monkeypatch.setattr(module, "_dest_state", counted)
+    drop = ConvertMode.DROP_AND_RECREATE
+    reports = convert_all(spark, sf_dir, dest, TABLES, ddl_mode=drop, data_mode=drop)
+    assert sorted(probed) == sorted(f"{dest}/{t}.parquet" for t in TABLES)
+    assert [r.data_action for r in reports] == ["copied"] * len(TABLES)

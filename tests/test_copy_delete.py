@@ -128,6 +128,22 @@ def test_dest_state_probe(spark, tmp_dest):
         cp.copy_table(spark, spark.range(3), tmp_dest, ConvertMode.SKIP_EXISTING)
 
 
+@pytest.mark.parametrize("mode", [ConvertMode.DROP_AND_RECREATE, ConvertMode.SKIP_ALL])
+def test_copy_modes_that_ignore_the_destination_never_probe(spark, tmp_dest, monkeypatch, mode):
+    """DROP_AND_RECREATE always writes and SKIP_ALL never does, so
+    neither reads the destination's state."""
+
+    def no_probe(*_):
+        raise AssertionError("copy_table probed the destination")
+
+    spark.range(3).write.parquet(tmp_dest)
+    monkeypatch.setattr(cp, "_dest_state", no_probe)
+    res = cp.copy_table(spark, spark.range(7), tmp_dest, mode)
+    writes = mode is ConvertMode.DROP_AND_RECREATE
+    assert res.record_count == (7 if writes else 0)
+    assert spark.read.parquet(tmp_dest).count() == (7 if writes else 3)
+
+
 def test_copy_drop_and_recreate_overwrites(spark, sf_dir, tmp_dest):
     src = load_table(spark, sf_dir, "orders")
     cp.copy_table(spark, src, tmp_dest, ConvertMode.SKIP_EXISTING)

@@ -96,6 +96,7 @@ def test_pipeline_empty_documents(spark):
         spark.createDataFrame([], sch), token_budget=1000, pack_capacity=64
     )
     assert out.count() == 0
+    report.resolve()
     assert report.stages["input"] == 0
 
 

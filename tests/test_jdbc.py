@@ -2,8 +2,9 @@
 jars) — the reference is a JDBC↔JDBC tool, and these tests run its copy /
 mode / delete semantics against a REAL database rather than dict-level
 option checks: batched parallel writes (W4), range-partitioned scans
-(S5), ConvertMode gating, metadata discovery (S1/S7), and the pushed
-range-DELETE SQL (W5, REF/data/DeleteWorker.java:17)."""
+(S5), metadata discovery (S1/S7), and the pushed range-DELETE SQL
+(W5, REF/data/DeleteWorker.java:17).  ConvertMode gating on both sinks
+is tests/test_converter.py's matrix."""
 
 from __future__ import annotations
 
@@ -44,28 +45,6 @@ def test_jdbc_round_trip_with_partitioned_read(spark, sf_dir, tmp_path):
     assert back.rdd.getNumPartitions() == 4
     cols = ["c_custkey", "c_name", "c_nationkey"]
     assert _rows(back, cols) == _rows(customer, cols)
-
-
-def test_jdbc_convert_mode_gating(spark, sf_dir, tmp_path):
-    url = _url(tmp_path)
-    nation = load_table(spark, sf_dir, "nation")
-    cp.write_jdbc(nation, url, "nation", driver=DRV)
-
-    # SKIP_EXISTING (SaveMode.ignore): existing table left untouched
-    region = load_table(spark, sf_dir, "region").select(
-        F.col("r_regionkey").alias("n_nationkey"),
-        F.col("r_name").alias("n_name"),
-        F.col("r_regionkey").alias("n_regionkey"),
-    )
-    cp.write_jdbc(region, url, "nation", mode=ConvertMode.SKIP_EXISTING, driver=DRV)
-    assert cp.read_jdbc(spark, url, "nation", driver=DRV).count() == nation.count()
-
-    # THROW_IF_EXISTS (SaveMode.error): raises on the existing table
-    with pytest.raises(Exception):
-        cp.write_jdbc(region, url, "nation", mode=ConvertMode.THROW_IF_EXISTS, driver=DRV)
-
-    # SKIP_ALL: whole phase is a no-op (returns without touching JDBC)
-    assert cp.write_jdbc(region, url, "nation", mode=ConvertMode.SKIP_ALL, driver=DRV) == 0
 
 
 def test_jdbc_metadata_discovery_and_existence_probe(spark, sf_dir, tmp_path):

@@ -679,6 +679,20 @@ def test_fused_round_probe_equivalence(spark):
         )
 
 
+def test_star_round_reuses_the_large_star_exchanges(spark):
+    """connected_groups' fused round feeds the large-star frame to two
+    consumers; both must read large-star's input exchanges from one
+    shuffle each (ReusedExchange), so fusing never re-shuffles the
+    edges."""
+    edges = spark.createDataFrame(
+        [(2, 1), (3, 2), (4, 3), (5, 4), (7, 6)], "a long, b long"
+    ).localCheckpoint()
+    rnd = dd._star_round(edges)
+    rnd.collect()
+    plan = rnd._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ReusedExchange") >= 2, plan
+
+
 def test_connected_groups_two_deep_chains_stay_separate(spark):
     """Two disjoint 20-node chains: pointer jumping must not leak labels
     across components — each chain converges to its own min id."""
@@ -1946,6 +1960,35 @@ def test_overlapped_checkpoints_report_every_failure(spark):
         _stage_checkpoints_overlapped(a, b)
     text = str(info.value) + "\n".join(getattr(info.value, "__notes__", []))
     assert "overlap-boom-a" in text and "overlap-boom-b" in text
+
+
+def test_overlapped_checkpoints_wait_for_an_aqe_off_scope(spark):
+    """planning_scale_rounds flips session-global AQE; an overlapped
+    checkpoint started from another driver thread while the scope is
+    open must wait until it exits, so its jobs never plan with AQE off."""
+    import threading
+    import time
+
+    from spanner_jdbc_converter_spark.operators.dedup import (
+        _stage_checkpoints_overlapped,
+    )
+    from spanner_jdbc_converter_spark.session import planning_scale_rounds
+
+    finished = []
+
+    def overlapped():
+        _stage_checkpoints_overlapped(spark.range(10), spark.range(20))
+        finished.append(time.monotonic())
+
+    with planning_scale_rounds(spark):
+        worker = threading.Thread(target=overlapped)
+        worker.start()
+        worker.join(3.0)
+        assert worker.is_alive()  # blocked on the open scope
+        exited = time.monotonic()
+    worker.join(120)
+    assert not worker.is_alive()
+    assert finished and finished[0] >= exited
 
 
 # -- bigram surprisal + hard negatives ---------------------------------------

@@ -32,6 +32,7 @@ def _run(spark, sf_dir):
 def test_pipeline_invariants(spark, sf_dir):
     out, report = _run(spark, sf_dir)
     rows = out.collect()
+    report.resolve()
     s = report.stages
 
     # stages only ever drop rows, and every stage kept something
@@ -81,29 +82,18 @@ def test_pipeline_is_deterministic(spark, sf_dir):
     assert ra == rb
 
 
-def test_lazy_observed_counts_match_eager(spark, sf_dir):
-    """with_counts="lazy" (one action, observed metrics) must report the
-    exact same per-stage counts as the eager per-stage count jobs."""
-    docs = load_table(spark, sf_dir, "documents")
+def test_observed_stage_counts_match_the_oracle(spark, sf_dir, duck):
+    """The stage counts observed on the pipeline's one materializing
+    action equal the DuckDB oracle's recomputation of every stage."""
+    from spanner_jdbc_converter_spark.oracle import compare_frames
+    from spanner_jdbc_converter_spark.plans import ORACLE, etl
 
-    _, eager = curate_documents(
-        docs,
-        benchmark_pred=F.col("source") == "src0",
-        token_budget=50_000,
-        with_counts=True,
-    )
-    out, lazy = curate_documents(
-        docs,
-        benchmark_pred=F.col("source") == "src0",
-        token_budget=50_000,
-        with_counts="lazy",
-    )
-    out.write.format("noop").mode("overwrite").save()
-    lazy.resolve()
-    lazy.release()
-    eager.release()
-    assert lazy.stages == eager.stages
-    assert set(lazy.stages) == {
+    etl._curated.clear()  # a fresh pipeline run, counted in this test
+    got = etl.pipeline_curate_report(spark, sf_dir).toPandas()
+    want = duck.sql(ORACLE["pipeline_curate_report"]).df()
+    result = compare_frames("pipeline_curate_report", got, want)
+    assert result.ok, str(result)
+    assert set(got["stage"]) == {
         "input", "quality_filter", "exact_dedup", "near_dedup",
         "decontaminated", "token_budget", "packed",
     }
@@ -130,12 +120,3 @@ def test_pipeline_entries_share_one_execution(spark, sf_dir):
     assert inv.agg(F.sum("n_docs")).first()[0] == packed.count() == stages["packed"]
     packed.unpersist()
 
-
-def test_lazy_counts_require_stage_persist(spark, sf_dir):
-    """lazy counts without the stage cache would multiply the observed
-    CollectMetrics subtrees (ADVICE r6) — the combination must refuse."""
-    import pytest
-
-    docs = load_table(spark, sf_dir, "documents")
-    with pytest.raises(ValueError, match="persist_stages"):
-        curate_documents(docs, with_counts="lazy", persist_stages=False)

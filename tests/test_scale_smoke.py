@@ -174,9 +174,9 @@ def test_curation_pipeline_at_10x(spark):
         benchmark_pred=F.col("source") == "src0",
         token_budget=50_000,
         pack_capacity=512,
-        with_counts=True,
     )
     n_packed = out.count()
+    report.resolve()
     wall = time.time() - t0
     assert report.stages["packed"] == n_packed
     assert report.stages["token_budget"] == n_packed

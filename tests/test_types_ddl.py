@@ -15,7 +15,7 @@ from spanner_jdbc_converter_spark.ddl import (
     drop_index_ddl,
     drop_table_ddl,
 )
-from spanner_jdbc_converter_spark.modes import ConvertMode, should_copy_data, to_save_mode
+from spanner_jdbc_converter_spark.modes import ConvertMode, TableExistsError, should_copy_data
 from spanner_jdbc_converter_spark.types import ColumnSpec, TableSpec
 
 # (jdbc code, size, expected spanner, expected pg) — mirrors the §1.4 table.
@@ -160,19 +160,6 @@ def test_table_spec_from_spark_schema(spark, sf_dir):
 
 
 @pytest.mark.parametrize(
-    "mode,save",
-    [
-        (ConvertMode.SKIP_ALL, None),
-        (ConvertMode.SKIP_EXISTING, "ignore"),
-        (ConvertMode.DROP_AND_RECREATE, "overwrite"),
-        (ConvertMode.THROW_IF_EXISTS, "error"),
-    ],
-)
-def test_convert_mode_to_save_mode(mode, save):
-    assert to_save_mode(mode) == save
-
-
-@pytest.mark.parametrize(
     "mode,empty,expected",
     [
         (ConvertMode.SKIP_ALL, True, False),
@@ -180,9 +167,19 @@ def test_convert_mode_to_save_mode(mode, save):
         (ConvertMode.SKIP_EXISTING, True, True),
         (ConvertMode.SKIP_EXISTING, False, False),
         (ConvertMode.DROP_AND_RECREATE, False, True),
+        (ConvertMode.DROP_AND_RECREATE, True, True),
         (ConvertMode.THROW_IF_EXISTS, True, True),
-        (ConvertMode.THROW_IF_EXISTS, False, False),
+        pytest.param(
+            ConvertMode.THROW_IF_EXISTS, False, TableExistsError,
+            id="ConvertMode.THROW_IF_EXISTS-False-raises",
+        ),
     ],
 )
 def test_should_copy_data_matrix(mode, empty, expected):
-    assert should_copy_data(mode, empty) is expected
+    """The one data-phase gate: it decides, and for
+    ThrowExceptionIfExists on a destination with rows it raises."""
+    if expected is TableExistsError:
+        with pytest.raises(TableExistsError, match="dest/t"):
+            should_copy_data(mode, empty, "dest/t")
+    else:
+        assert should_copy_data(mode, empty, "dest/t") is expected
