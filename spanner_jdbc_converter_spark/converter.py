@@ -39,7 +39,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from spanner_jdbc_converter_spark.catalog import (
     PRIMARY_KEYS,
@@ -75,11 +74,11 @@ class TableConversionReport:
 
 def _convert_phases(
     table: str,
-    schema: T.StructType,
+    source: DataFrame,
     destination: str,
     state: tuple[bool, bool],
     count_rows: Callable[[], int],
-    write: Callable[[], ConversionResult],
+    write: Callable[[DataFrame], ConversionResult],
     ddl_mode: ConvertMode,
     data_mode: ConvertMode,
     dialect: str,
@@ -89,8 +88,11 @@ def _convert_phases(
     """DDL → delete-probe → copy for one table, whatever the sink
     (REF/Converter.java:69-83).  ``state`` is the destination's
     ``(exists, empty)``, probed once by the sink; ``count_rows`` is
-    called only to size the delete; ``write`` replaces the destination
-    with the source and is called only if the table is copied."""
+    called only to size the delete; ``write(frame)`` replaces the
+    destination with ``frame``.  It gets the source if the table is
+    copied, and an empty frame of the source schema if the DDL phase
+    drops an existing table that the data phase then skips, so the
+    recreated table ends empty as in the reference."""
     report = TableConversionReport(table=table)
     exists, empty = state
 
@@ -99,7 +101,7 @@ def _convert_phases(
     if ddl_mode is not ConvertMode.SKIP_ALL:
         refuse_existing(ddl_mode, empty, destination)
         pk = primary_key if primary_key is not None else list(PRIMARY_KEYS.get(table, ()))
-        spec = table_spec_from_schema(table, schema, pk)
+        spec = table_spec_from_schema(table, source.schema, pk)
         if not exists:
             report.ddl_action = "created"
             report.ddl = [create_table_ddl(spec, dialect, overrides=type_overrides)]
@@ -109,7 +111,7 @@ def _convert_phases(
                 drop_table_ddl(table),
                 create_table_ddl(spec, dialect, overrides=type_overrides),
             ]
-            dropped = empty = True  # the write below realizes the drop
+            dropped = empty = True  # a write below realizes the drop
 
     # -- delete phase (REF/Converter.java:76-79) ----------------------------
     if data_mode is ConvertMode.DROP_AND_RECREATE and not empty:
@@ -123,8 +125,10 @@ def _convert_phases(
     if dropped and data_mode is not ConvertMode.SKIP_ALL:
         copy_mode = ConvertMode.DROP_AND_RECREATE  # fresh table: always load
     if should_copy_data(copy_mode, empty, destination):
-        report.result = write()
+        report.result = write(source)
         report.data_action = "copied"
+    elif dropped:
+        write(source.sparkSession.createDataFrame([], source.schema))
     return report
 
 
@@ -146,10 +150,10 @@ def convert_table(
     ``TableConverter.specificColumnMapping.*`` surface (P7): keys are a
     bare column name or ``table.column`` (qualified wins, types.py)."""
     return _convert_phases(
-        table, source.schema, dest_path, _dest_state(spark, dest_path),
+        table, source, dest_path, _dest_state(spark, dest_path),
         count_rows=lambda: spark.read.parquet(dest_path).count(),
-        write=lambda: copy_table(
-            spark, source, dest_path, ConvertMode.DROP_AND_RECREATE, target_partitions
+        write=lambda frame: copy_table(
+            spark, frame, dest_path, ConvertMode.DROP_AND_RECREATE, target_partitions
         ),
         ddl_mode=ddl_mode, data_mode=data_mode, dialect=dialect,
         primary_key=primary_key, type_overrides=type_overrides,
@@ -246,7 +250,7 @@ def convert_table_jdbc(
     # one-row probe, never a Spark-side scan (jdbc_table_nonempty docstring)
     empty = not (exists and jdbc_table_nonempty(spark, url, table, driver))
 
-    def write() -> ConversionResult:
+    def write(frame: DataFrame) -> ConversionResult:
         start = time.time()
         # Prepare phase: one aggregation pass for the metrics, the
         # reference's prepare/execute split (X3: COUNT + partition
@@ -256,15 +260,15 @@ def convert_table_jdbc(
         # 'bytes': None} for customer, orders and lineitem at sf0.01
         # (true 1,500 / 15,000 / 60,000 rows).  It counted only with a
         # shuffle between it and the writer, which moves every row again.
-        prep = source.agg(
+        prep = frame.agg(
             F.count(F.lit(1)).alias("rows"),
-            F.sum(actual_row_bytes_expr(source.schema)).alias("bytes"),
+            F.sum(actual_row_bytes_expr(frame.schema)).alias("bytes"),
         ).first()
-        write_jdbc(source, url, table, driver=driver, num_partitions=num_partitions)
+        write_jdbc(frame, url, table, driver=driver, num_partitions=num_partitions)
         return ConversionResult(prep["rows"] or 0, prep["bytes"] or 0, start, time.time())
 
     return _convert_phases(
-        table, source.schema, f"{url}::{table}", (exists, empty),
+        table, source, f"{url}::{table}", (exists, empty),
         count_rows=lambda: jdbc_count(spark, url, table, driver),  # pushed COUNT(*)
         write=write,
         ddl_mode=ddl_mode, data_mode=data_mode, dialect=dialect,

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spanner_jdbc_converter_spark import session
+
 #: Cluster count and Lloyd iteration count — FIXED so the oracle can
 #: unroll the same computation (see module docstring).
 KMEANS_K = 4
@@ -171,7 +173,6 @@ def semantic_dedup(
     threshold: float = SEMDEDUP_THRESHOLD,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
 ) -> DataFrame:
     """SemDedup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     cluster the embeddings with the deterministic fixed-iteration k-means
@@ -194,19 +195,15 @@ def semantic_dedup(
     cosines, min-id keeper — the DuckDB oracle replays all three.
 
     The assignment feeds TWO consumers (the cluster packing and the
-    final per-id join), so ``materialize=True`` (default) checkpoints it
-    once instead of running k-means twice (the incremental-dedup lesson:
-    multi-consumer stage outputs need a materialization point).  Pass
-    ``materialize=False`` for a fully lazy plan (plan inspection)."""
+    final per-id join), so it is checkpointed once instead of running
+    k-means twice (the incremental-dedup lesson: multi-consumer stage
+    outputs need a materialization point)."""
     from spanner_jdbc_converter_spark.functions.vector import norm
-    from spanner_jdbc_converter_spark.operators.dedup import (
-        _stage_checkpoint,
-        bucket_allpairs_scores,
-    )
+    from spanner_jdbc_converter_spark.operators.dedup import bucket_allpairs_scores
 
-    asg = kmeans_fixed(emb, k, iters, id_col, vec_col).select(id_col, "cluster")
-    if materialize:
-        asg = _stage_checkpoint(asg)
+    (asg,) = session.stage(
+        kmeans_fixed(emb, k, iters, id_col, vec_col).select(id_col, "cluster")
+    )
     members = emb.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__vec"),
@@ -346,7 +343,6 @@ def silhouette_report(
     iters: int = KMEANS_ITERS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-cluster centroid-silhouette quality report for the fixed
     k-means: for each point, a = squared distance to its OWN (final)
@@ -360,22 +356,19 @@ def silhouette_report(
     Scale: one broadcast of K centroid rows scores every point against
     all clusters (map-side, the assignment's own shape); a rides the
     final assignment; b is a per-point min with map-side combine.  The
-    assignment feeds two consumers (a and the b-join), so
-    ``materialize=True`` checkpoints it once.  Parity: a and b are the
+    assignment feeds two consumers (a and the b-join), so it is
+    checkpointed once.  Parity: a and b are the
     oracle-exact _sq_dist folds, s is a fixed-order IEEE expression
     rounded at 6, and the per-cluster mean routes through DECIMAL(18,6)
     sums (order-independent) before one division.
 
     Output: (cluster, n_points, mean_silhouette)."""
-    from spanner_jdbc_converter_spark.operators.dedup import _stage_checkpoint
-
     cents = seed_centroids(emb, k, id_col, vec_col)
     asg = assign_clusters(emb, cents, id_col, vec_col)
     for _ in range(iters - 1):
         cents = update_centroids(emb, asg, id_col, vec_col)
         asg = assign_clusters(emb, cents, id_col, vec_col)
-    if materialize:
-        asg = _stage_checkpoint(asg)
+    (asg,) = session.stage(asg)
     scored = (
         emb.select(id_col, vec_col)
         .crossJoin(F.broadcast(cents))
@@ -866,11 +859,7 @@ def pca2_coords(
             ck = ck + mu[d] * vk[d]
         return F.expr(f"({_fold_sql(vec_sql(vk))}) - {dlit(ck)}")
 
-    from spanner_jdbc_converter_spark.operators.dedup import (
-        _stats_reset_checkpoint,
-    )
-
-    out = _stats_reset_checkpoint(
+    out = session.stats_reset_checkpoint(
         x.select(
             F.col("__id").alias("vec_id"),
             F.round(proj(v1), 6).alias("pc1_coord"),

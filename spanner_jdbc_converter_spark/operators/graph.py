@@ -3,7 +3,7 @@ PageRank over an arbitrary edge DataFrame.
 
 Companion to operators/dedup.py::dedup_groups (min-label + pointer
 jumping); same iterative-DataFrame discipline: every round is keyed
-joins + one grouped aggregate, the lineage is cut with ``localCheckpoint``
+joins + one grouped aggregate, the lineage is cut with ``session.stage``
 per iteration so the plan stays constant-depth, and the iteration count
 is FIXED so a DuckDB oracle can unroll the rounds exactly.
 
@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from spanner_jdbc_converter_spark import session
 
 #: Standard damping factor.
 DAMPING = 0.85
@@ -45,22 +47,21 @@ def pagerank_fixed(
     shuffle), a map-side-combined DECIMAL groupBy on dst, and a left
     join back to the node frame for dangling/no-inbound nodes.  Ranks
     are |V|-sized; when |V| ≪ |E| Spark broadcasts them onto the edge
-    scan automatically.  ``localCheckpoint`` truncates lineage so the
+    scan automatically.  :func:`session.stage` truncates lineage so the
     plan does not deepen with the iteration count (same discipline as
-    dedup_groups, dedup.py:338).
+    dedup.connected_groups).
 
     Nodes with no outbound edges (dangling) simply leak their mass —
     the plain PageRank-without-redistribution variant — which keeps the
     per-iteration recurrence local to the edge list; the oracle unrolls
     the identical recurrence.
 
-    ``planning_scale=True`` (optimization r18, guide §1.2/§7.3): for
-    graphs whose NODE DOMAIN is fixed-cardinality by construction at
-    any corpus scale (the 25-value brand graph — the data-scale work is
-    the edge DERIVATION, which is checkpointed before the loop), the
-    per-round checkpoint jobs are pure driver floor: profiled 2.4 s of
-    a 2.5 s build in 5 localCheckpoint actions (38 AQE stage-jobs) for
-    ≤625-row frames.  In this mode the rounds compose LAZILY and
+    ``planning_scale=True``: for graphs whose NODE DOMAIN is
+    fixed-cardinality by construction at any corpus scale (the 25-value
+    brand graph — the data-scale work is the edge DERIVATION, which is
+    checkpointed before the loop), the per-round checkpoint jobs are
+    pure driver floor: profiled 2.4 s of a 2.5 s build in 5 checkpoint
+    actions (38 AQE stage-jobs) for ≤625-row frames.  In this mode the rounds compose LAZILY and
     materialize in ONE checkpoint under ``planning_scale_rounds`` (AQE
     off — the clustering round loops' justification verbatim: fixed key
     domain ⇒ skew impossible, metadata-sized reduce by construction ⇒
@@ -76,9 +77,9 @@ def pagerank_fixed(
     # count, the initial checkpoint, each iteration) would otherwise
     # recompute the full upstream derivation — measured 9.4 s → 1.x s on
     # the brand graph, and at 100 TB the derivation is the expensive part.
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint()
+    (e,) = session.stage(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    )
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -118,15 +119,13 @@ def pagerank_fixed(
         # fixed node domain (see docstring): compose every round lazily
         # and run them as ONE AQE-off checkpoint job — the recurrence is
         # unchanged, only the materialization boundary moves
-        from spanner_jdbc_converter_spark.session import planning_scale_rounds
-
-        with planning_scale_rounds(e.sparkSession):
+        with session.planning_scale_rounds(e.sparkSession):
             for _ in range(iterations):
                 ranks = _round(ranks)
-            return ranks.localCheckpoint()
-    ranks = ranks.localCheckpoint()
+            return session.stage(ranks)[0]
+    (ranks,) = session.stage(ranks)
     for _ in range(iterations):
-        ranks = _round(ranks).localCheckpoint()
+        (ranks,) = session.stage(_round(ranks))
     return ranks
 
 
@@ -172,15 +171,14 @@ def pagerank_oracle_sql(
 def _canonical_undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     """Canonical (u < v) distinct undirected edge frame, self-loops
     dropped, MATERIALIZED (it feeds four branches downstream)."""
-    return (
+    return session.stage(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
         )
         .distinct()
-        .localCheckpoint()
-    )
+    )[0]
 
 
 def _degree_frame(e: DataFrame) -> DataFrame:
@@ -337,17 +335,19 @@ def pagerank_weighted_fixed(
 
     Same discipline as :func:`pagerank_fixed` (which see): one edge
     materialization, per-round keyed joins + one DECIMAL groupBy,
-    localCheckpoint lineage cuts, round-12 contributions.  Weights must
-    be exact integers (counts) so rank·w and the out-weight totals stay
-    IEEE-deterministic: rank·w is one double multiply of an exactly-
+    :func:`session.stage` lineage cuts, round-12 contributions.  Weights
+    must be exact integers (counts) so rank·w and the out-weight totals
+    stay IEEE-deterministic: rank·w is one double multiply of an exactly-
     promoted long, the division by the exact out-weight is one more op,
     and the DECIMAL sum is order-free — the oracle unrolls identically.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("long").alias("w"),
-    ).localCheckpoint()
+    (e,) = session.stage(
+        edges.select(
+            F.col(src_col).alias("src"),
+            F.col(dst_col).alias("dst"),
+            F.col(weight_col).cast("long").alias("w"),
+        )
+    )
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -357,9 +357,9 @@ def pagerank_weighted_fixed(
     n_nodes = nodes.count()
     base = (1.0 - damping) / n_nodes
 
-    ranks = nodes.select(
-        "node", F.round(F.lit(1.0 / n_nodes), RANK_SCALE).alias("rank")
-    ).localCheckpoint()
+    (ranks,) = session.stage(
+        nodes.select("node", F.round(F.lit(1.0 / n_nodes), RANK_SCALE).alias("rank"))
+    )
 
     for _ in range(iterations):
         contrib = (
@@ -376,9 +376,8 @@ def pagerank_weighted_fixed(
             .groupBy("node")
             .agg(F.sum("c").alias("mass"))
         )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
+        (ranks,) = session.stage(
+            nodes.join(contrib, "node", "left").select(
                 "node",
                 F.round(
                     F.lit(base)
@@ -387,7 +386,6 @@ def pagerank_weighted_fixed(
                     RANK_SCALE,
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
     return ranks
 
@@ -522,11 +520,13 @@ def triangle_estimate_from(
     join is paid once and shared with :func:`triangle_counts_from`."""
     from spanner_jdbc_converter_spark.functions.hashing import md5_long
 
-    kept = e.filter(
-        md5_long(F.concat_ws(":", F.lit(seed_tag), F.col("u"), F.col("v")))
-        % p_inv
-        == 0
-    ).localCheckpoint()
+    (kept,) = session.stage(
+        e.filter(
+            md5_long(F.concat_ws(":", F.lit(seed_tag), F.col("u"), F.col("v")))
+            % p_inv
+            == 0
+        )
+    )
     exact = per_node.agg(
         (F.coalesce(F.sum("n_triangles"), F.lit(0)) / 3)
         .cast("long")
@@ -631,8 +631,8 @@ def kcore_peel_layers(
     Scale: each round is one degree groupBy over the live edge frame
     plus two |V|-sized semi-joins back onto it; the live node frame
     only shrinks, Spark broadcasts it onto the edge scan when |V| ≪
-    |E|, and ``localCheckpoint`` cuts lineage per round so the plan
-    stays constant-depth (the dedup_groups / pagerank_fixed
+    |E|, and :func:`session.stage` cuts lineage per round so the plan
+    stays constant-depth (the connected_groups / pagerank_fixed
     discipline).  No step is quadratic: peel work is O(rounds · |E|).
 
     Output: (node, layer) for EVERY node of the canonical graph —
@@ -658,9 +658,9 @@ def kcore_peel_layers_from(
     degree frame and fall into that round's anti-join layer.
 
     The initial degree frame is checkpointed and serves three uses in
-    ONE pass over the edges (review r17): the node count, the edge
-    count (Σdeg / 2), and round 1's survivor filter."""
-    deg0 = _degree_frame(e).localCheckpoint()
+    ONE pass over the edges: the node count, the edge count (Σdeg / 2),
+    and round 1's survivor filter."""
+    (deg0,) = session.stage(_degree_frame(e))
     n_nodes = deg0.count()
     if n_nodes == 0:  # empty / all-self-loop input: empty layer frame
         return deg0.select(
@@ -675,18 +675,15 @@ def kcore_peel_layers_from(
     for r in range(1, rounds + 1):
         if deg is None:
             deg = _degree_frame(cur)
-        survivors = (
-            deg.filter(F.col("deg") >= k).select("node")
-        ).localCheckpoint()
+        (survivors,) = session.stage(deg.filter(F.col("deg") >= k).select("node"))
         deg = None
         peeled = active.join(survivors, "node", "left_anti").select(
             "node", F.lit(r).cast("int").alias("layer")
         )
         layers.append(peeled)
-        cur = (
+        (cur,) = session.stage(
             cur.join(survivors.select(F.col("node").alias("u")), "u", "left_semi")
             .join(survivors.select(F.col("node").alias("v")), "v", "left_semi")
-            .localCheckpoint()
         )
         active = survivors
     out = layers[0]
@@ -783,7 +780,7 @@ def label_propagation_fixed(
     front; each round is an equi-join of the |V|-sized label frame onto
     the neighbor list (broadcast when |V| ≪ |E|), a map-side-combined
     (node, label) count, and one deterministic max_by argmax — all
-    keyed shuffles, lineage cut per round with ``localCheckpoint``.
+    keyed shuffles, lineage cut per round with :func:`session.stage`.
 
     Output: (node, community) for every node with ≥ 1 edge."""
     e = _canonical_undirected(edges, src_col, dst_col)
@@ -793,19 +790,19 @@ def label_propagation_fixed(
 def label_propagation_from(e: DataFrame, iterations: int = 3) -> DataFrame:
     """Run the :func:`label_propagation_fixed` rounds on a
     PRE-canonicalized (u < v, distinct, checkpoint-backed) edge frame —
-    the ``kcore_peel_layers_from`` pattern (optimization r18): callers
-    holding the session-cached part co-purchase pair frame skip the
-    basket derivation and re-canonicalization entirely.
+    the ``kcore_peel_layers_from`` pattern: callers holding the
+    session-cached part co-purchase pair frame skip the basket
+    derivation and re-canonicalization entirely.
 
-    The initial label frame is LAZY (optimization r18): it has exactly
-    one consumer (round 1's join), so checkpointing it was a pure extra
-    driver barrier — the distinct now runs inside round 1's checkpoint
-    job, same executor work, one fewer job."""
-    nbr = e.select(
-        F.col("u").alias("node"), F.col("v").alias("nb")
-    ).unionByName(
-        e.select(F.col("v").alias("node"), F.col("u").alias("nb"))
-    ).localCheckpoint()
+    The initial label frame is LAZY: it has exactly one consumer (round
+    1's join), so checkpointing it would be a pure extra driver barrier
+    — the distinct runs inside round 1's checkpoint job instead, same
+    executor work, one fewer job."""
+    (nbr,) = session.stage(
+        e.select(F.col("u").alias("node"), F.col("v").alias("nb")).unionByName(
+            e.select(F.col("v").alias("node"), F.col("u").alias("nb"))
+        )
+    )
     labels = nbr.select("node").distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -820,12 +817,10 @@ def label_propagation_from(e: DataFrame, iterations: int = 3) -> DataFrame:
         # deterministic argmax: highest count, then smallest label —
         # the (c, -lbl) struct is unique per node group, so max_by
         # cannot tie
-        labels = (
-            counted.groupBy("node")
-            .agg(
+        (labels,) = session.stage(
+            counted.groupBy("node").agg(
                 F.expr("max_by(lbl, struct(c, -lbl))").alias("lbl")
             )
-            .localCheckpoint()
         )
     return labels.select("node", F.col("lbl").alias("community"))
 

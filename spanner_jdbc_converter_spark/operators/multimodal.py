@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spanner_jdbc_converter_spark.session import session_shuffle_width
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
@@ -2658,17 +2660,6 @@ def media_store(spark: "SparkSession", sf_dir: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _decode_width(spark: "SparkSession") -> int:
-    """Partition width for the spread-before-CPU-bound-decode exchange —
-    the session's configured shuffle width (scale-adaptive: the conf is
-    the per-cluster knob, locally the core count), falling back to the
-    cluster default parallelism when the conf is non-integer under some
-    AQE managers (same contract as plans/extensions._shuffle_width)."""
-    from spanner_jdbc_converter_spark.session import session_shuffle_width
-
-    return session_shuffle_width(spark)
-
-
 def payload_view(spark: "SparkSession", sf_dir: str, kind: str) -> DataFrame:
     """(doc_id, payload) projection of ONE media column from the store —
     the scan a decode query starts from.
@@ -2702,7 +2693,7 @@ def payload_view(spark: "SparkSession", sf_dir: str, kind: str) -> DataFrame:
     return (
         media_store(spark, sf_dir)
         .select("doc_id", F.col(col).alias("payload"))
-        .repartition(_decode_width(spark), "doc_id")
+        .repartition(session_shuffle_width(spark), "doc_id")
     )
 
 

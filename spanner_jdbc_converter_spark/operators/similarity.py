@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spanner_jdbc_converter_spark import session
 from spanner_jdbc_converter_spark.functions.vector import (
     dlit,
     dot,
@@ -1310,7 +1311,6 @@ def ann_recall_report(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    materialize: bool = True,
     pq_books: dict | None = None,
     res_books: dict | None = None,
     opq_rot: dict | None = None,
@@ -1318,8 +1318,8 @@ def ann_recall_report(
 ) -> DataFrame:
     """Recall@k of every approximate similarity path against the exact
     brute-force top-k — THE number a user tunes tables/planes/nprobe
-    against (VERDICT r10 #5: the approximate entries shipped with no
-    measured recall, so parameter tuning flew blind).
+    against: without it the approximate entries ship with no measured
+    recall, and parameter tuning flies blind.
 
     recall@k(method) = |approx top-k pairs ∩ exact top-k pairs| / |exact
     top-k pairs|, pooled over all queries.  The nine production paths
@@ -1348,10 +1348,6 @@ def ann_recall_report(
     with zero hits still reports (recall 0.0)."""
     from functools import reduce
 
-    from spanner_jdbc_converter_spark.operators.dedup import (
-        _stage_checkpoints_overlapped,
-    )
-
     exact = cosine_topk(queries, corpus, k, vec_col, id_col).select(
         "query_id", "match_id"
     )
@@ -1359,23 +1355,19 @@ def ann_recall_report(
     nz_c = corpus.filter(norm(vec_col) > 0)
     # ONE ADC scan serves both hybrid rows: the ivfpq row is its top-k
     # prefix, the refine row exact-re-ranks its top-REFINE_N — without
-    # the shared (and, under materialize, checkpointed: union legs do
-    # not dedupe common subplans) frame the report would run the
-    # coarse-assignment + code scan twice (review r16).  Same shape for
-    # the residual pair of rows.
+    # the shared, checkpointed frame (union legs do not dedupe common
+    # subplans) the report would run the coarse-assignment + code scan
+    # twice.  Same shape for the residual pair of rows.
     adc = ivfpq_topk(
         nz_q, nz_c, REFINE_N, vec_col=vec_col, id_col=id_col, books=pq_books
     ).select("query_id", "match_id", "rank")
     res_adc = residual_ivfpq_topk(
         nz_q, nz_c, REFINE_N, vec_col=vec_col, id_col=id_col, books=res_books
     ).select("query_id", "match_id", "rank")
-    if materialize:
-        # The three materialized frames are INDEPENDENT subtrees (exact
-        # brute-force set, PQ ADC scan, residual ADC scan): overlap
-        # their eager checkpoint jobs so the wall is the slowest one,
-        # not the sum, and each job's straggler tail back-fills with the
-        # next job's tasks (guide §2.6).
-        exact, adc, res_adc = _stage_checkpoints_overlapped(exact, adc, res_adc)
+    # The three staged frames are INDEPENDENT subtrees (exact
+    # brute-force set, PQ ADC scan, residual ADC scan), so their
+    # checkpoint jobs overlap.
+    exact, adc, res_adc = session.stage(exact, adc, res_adc)
     paths = [
         ("ivf", ivf_topk(queries, corpus, k, vec_col=vec_col, id_col=id_col)),
         ("lsh", lsh_ann_topk(queries, corpus, k, vec_col=vec_col, id_col=id_col)),

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spanner_jdbc_converter_spark import session
 from spanner_jdbc_converter_spark.functions.hashing import md5_long
 
 #: Tiny per-language stopword profiles for the n-gram/stopword language-ID
@@ -409,7 +410,6 @@ def bpe_merges(
     df: DataFrame,
     text_col: str = "text",
     rounds: int = BPE_MERGE_ROUNDS,
-    materialize: bool = True,
 ) -> DataFrame:
     """Learn the first ``rounds`` BPE merge rules from the corpus —
     tokenizer induction, distributed: the classic word-frequency BPE
@@ -430,20 +430,19 @@ def bpe_merges(
     the oracle replays every round with a recursive-CTE merge walk that
     performs the identical greedy fold.
 
-    ``materialize`` (default) checkpoints the symbol frame each round —
-    the next round's pair count AND fold both consume it, and the lazy
-    tower would otherwise recompute the whole prefix per round.
+    The symbol frame is checkpointed each round — the next round's pair
+    count AND fold both consume it, and the lazy tower would otherwise
+    recompute the whole prefix per round.
 
     Output: (rank, left_sym, right_sym, merged, pair_count), one row
     per learned merge, rank 1..rounds."""
-    return bpe_learn(df, text_col, rounds, materialize)[0]
+    return bpe_learn(df, text_col, rounds)[0]
 
 
 def bpe_segment(
     df: DataFrame,
     text_col: str = "text",
     rounds: int = BPE_MERGE_ROUNDS,
-    materialize: bool = True,
 ) -> DataFrame:
     """Apply the ``rounds`` BPE merges :func:`bpe_merges` learns to the
     vocabulary — the tokenizer's APPLY side: each word's final subword
@@ -453,20 +452,19 @@ def bpe_segment(
 
     Output: (w, cnt, n_pieces, segmentation) — segmentation is the
     space-joined subword sequence, n_pieces its length."""
-    return bpe_learn(df, text_col, rounds, materialize)[1]
+    return bpe_learn(df, text_col, rounds)[1]
 
 
 def bpe_learn(
     df: DataFrame,
     text_col: str = "text",
     rounds: int = BPE_MERGE_ROUNDS,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """One BPE learn loop, BOTH outputs: (merge table, segmentation) —
     callers that need the rules and the segmented vocabulary (the two
     corpus entries) share the checkpointed round stages instead of
     running the loop twice."""
-    merge_rows, seq = _bpe_rounds(df, text_col, rounds, materialize)
+    merge_rows, seq = _bpe_rounds(df, text_col, rounds)
     merges = merge_rows[0]
     for m in merge_rows[1:]:
         merges = merges.unionByName(m)
@@ -479,13 +477,9 @@ def bpe_learn(
     return merges, segment
 
 
-def _bpe_rounds(df, text_col, rounds, materialize):
+def _bpe_rounds(df, text_col, rounds):
     """The shared BPE learn loop: returns (per-round one-row merge
     frames, final symbol frame with all merges applied)."""
-    from spanner_jdbc_converter_spark.operators.dedup import _stage_checkpoint
-
-    stage = (lambda d: _stage_checkpoint(d)) if materialize else (lambda d: d)
-
     words = (
         df.select(F.explode(tokens(text_col)).alias("w"))
         .groupBy("w")
@@ -501,7 +495,7 @@ def _bpe_rounds(df, text_col, rounds, materialize):
     )
     merge_rows = []
     for r in range(1, rounds + 1):
-        seq = stage(seq)
+        (seq,) = session.stage(seq)
         pair_idx = F.when(
             F.size("syms") > 1, F.sequence(F.lit(1), F.size("syms") - 1)
         ).otherwise(F.expr("CAST(array() AS array<int>)"))
@@ -621,7 +615,6 @@ def unigram_lm_learn(
     seed_keep: int = UNIGRAM_SEED_KEEP,
     prunes: tuple = UNIGRAM_PRUNES,
     max_piece: int = UNIGRAM_MAX_PIECE,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Unigram-LM subword tokenizer, SentencePiece-style (Kudo 2018,
     arXiv:1804.10959), learned as fixed-round HARD-EM with
@@ -653,15 +646,11 @@ def unigram_lm_learn(
     |chars|) and rides driver-side as a closure set (the k-means
     centroid-literal discipline); each round is one Arrow-batched
     segmentation pass + one map-side-combined usage count + one
-    TakeOrdered top-K.  ``materialize`` checkpoints the words frame
-    (reused every round) and the final segmentation (feeds both
-    outputs).
+    TakeOrdered top-K.  The words frame (reused every round) and the
+    final segmentation (feeds both outputs) are checkpointed.
 
     Returns (pieces, segment): pieces = (piece, n_used, ln_prob);
     segment = (w, cnt, n_pieces, segmentation)."""
-    from spanner_jdbc_converter_spark.operators.dedup import _stage_checkpoint
-
-    stage = (lambda d: _stage_checkpoint(d)) if materialize else (lambda d: d)
     spark = df.sparkSession
 
     words = (
@@ -669,7 +658,7 @@ def unigram_lm_learn(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    words = stage(words)
+    (words,) = session.stage(words)
 
     def sub_pieces(length: int):
         return F.when(
@@ -734,7 +723,7 @@ def unigram_lm_learn(
         )
         vocab = {r.piece for r in keep.select("piece").collect()} | char_set
 
-    segf = stage(segment_with(vocab))
+    (segf,) = session.stage(segment_with(vocab))
     usage = usage_of(segf)
     total = usage.agg(F.sum("n_used").alias("__total"))
     pieces = (
@@ -1347,7 +1336,6 @@ def dsir_importance(
     target: str = REF_SOURCE,
     buckets: int = DSIR_BUCKETS,
     keep_frac: float = DSIR_KEEP_FRAC,
-    materialize: bool = True,
 ) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al. 2023):
     score every doc by the log importance weight of its hashed-bigram
@@ -1414,13 +1402,7 @@ def dsir_importance(
     # count + join branches and the per-source totals); without a
     # materialization point the whole corpus-scoring pipeline re-executes
     # per reference.  The frame is doc-count-sized — checkpoint it.
-    # ``materialize=False`` keeps the plan lazy for plan inspection.
-    if materialize:
-        from spanner_jdbc_converter_spark.operators.dedup import (
-            _stage_checkpoint,
-        )
-
-        per = _stage_checkpoint(per)
+    (per,) = session.stage(per)
     # Exact micro-unit integer sort key (s has 6 dp, so s·10⁶ is
     # integral); negated so ascending key = descending weight.  Value
     # bands aren't as uniform as hash bands, but correctness is exact

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spanner_jdbc_converter_spark import session
 from spanner_jdbc_converter_spark.catalog import load_table
 from spanner_jdbc_converter_spark.operators import sessions as ss
 from spanner_jdbc_converter_spark.plans.registry import register
@@ -1454,11 +1455,7 @@ def validate_stream_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    from spanner_jdbc_converter_spark.operators.dedup import _stage_checkpoint
-
-    from spanner_jdbc_converter_spark.session import session_shuffle_width
-
-    dual = _stage_checkpoint(
+    (dual,) = session.stage(
         # project to the walk's columns BEFORE the exchange (guide
         # §2.3/§4.1): the opaque applyInPandas defeats column pruning,
         # so without the explicit select the unused event_type strings
@@ -1468,9 +1465,9 @@ def validate_stream_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(khb)
         # explicit-width spread before the CPU-bound dual walk: the
         # groupBy reuses the pinned partitioning (one exchange), and
-        # AQE can no longer coalesce the walk near-serial (opt r17 —
-        # the sessions.py::cusum_alarms measurement)
-        .repartition(session_shuffle_width(spark), "user_id")
+        # AQE can no longer coalesce the walk near-serial (the
+        # sessions.py::cusum_alarms measurement)
+        .repartition(session.session_shuffle_width(spark), "user_id")
         .groupBy("user_id")
         .applyInPandas(_dual_cusum_walk, dual_schema)
         .filter(F.col("alarm_t") | F.col("alarm_d"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spanner_jdbc_converter_spark import session
 from spanner_jdbc_converter_spark.catalog import load_table
 from spanner_jdbc_converter_spark.functions.hashing import (
     md5_long_sql,
@@ -3147,7 +3148,7 @@ def _oprep_stages_for(
     exact, cand = dd.lsh_operating_report_stages(
         d, threshold=0.5, max_df=dd.PAIRS_MAX_DF
     )
-    return dd._stage_checkpoints_overlapped(exact, cand)
+    return session.stage(exact, cand)
 
 
 def _op_report_for(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3551,18 +3552,6 @@ def pipeline_source_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # color-convert chain bit-for-bit.
 # ---------------------------------------------------------------------------
 
-def _shuffle_width(spark: SparkSession) -> int:
-    """The session's configured shuffle width — the explicit partition
-    count for spread-before-CPU-bound-decode repartitions (explicit so
-    AQE cannot coalesce the decode stage away).  Sessions outside this
-    repo may carry a non-integer conf value ("auto" under some AQE
-    managers) — fall back to the cluster's default parallelism then
-    (ADVICE r15)."""
-    from spanner_jdbc_converter_spark.session import session_shuffle_width
-
-    return session_shuffle_width(spark)
-
-
 #: Literal per-axis IDCT basis rows (only u∈{0,1,2} carry synthetic
 #: energy).  Must match multimodal._JPEG_IDCT_S — pinned by
 #: tests/test_multimodal_jpeg.py.
@@ -3770,7 +3759,7 @@ def dedup_jpeg_image_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     CPU-bound decode stage) and stage-checkpointed so the band
     self-join never re-runs the Huffman+IDCT work per side; the bucket
     join shuffles (id, 8-byte hash) rows only."""
-    hashes = dd._stage_checkpoint(
+    (hashes,) = session.stage(
         mm.decode_jpeg_dhash(mm.payload_view(spark, sf_dir, "jpeg"))
     )
     return dd.hamming_band_pairs(
@@ -3934,7 +3923,7 @@ def multimodal_jpeg420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exchange carries 8-byte ids instead of synthesized payloads
         # (guide §2.3/§8), and the synth stage no longer runs at the
         # tiny scan's split count (serial at fixture scale — opt r17)
-        .repartition(_shuffle_width(spark), "doc_id")
+        .repartition(session.session_shuffle_width(spark), "doc_id")
     )
     return mm.decode_jpeg_features(mm.attach_jpeg420_payload(d))
 
@@ -3957,7 +3946,7 @@ def multimodal_jpeg422_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .select("doc_id")
         # ids-before-synth spread — see the 4:2:0 entry (opt r17)
-        .repartition(_shuffle_width(spark), "doc_id")
+        .repartition(session.session_shuffle_width(spark), "doc_id")
     )
     return mm.decode_jpeg_features(mm.attach_jpeg422_payload(d))
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spanner_jdbc_converter_spark import session
 from spanner_jdbc_converter_spark.catalog import load_table
 from spanner_jdbc_converter_spark.operators import graph as gr
 from spanner_jdbc_converter_spark.operators import sketches as sk
@@ -969,12 +970,11 @@ def _tri_closure(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
 def _copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the slice emission is x < y over a per-order SET, so keys are
     # already canonical (u < v, no self-loops)
-    return (
+    return session.stage(
         _copurchase_pairs(spark, sf_dir)
         .groupBy(F.col("src").alias("u"), F.col("dst").alias("v"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
+    )[0]
 
 
 def _canonical_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -989,12 +989,11 @@ def _canonical_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    return (
+    return session.stage(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("p_brand")).alias("brands"))
-        .localCheckpoint()
-    )
+    )[0]
 
 
 #: The canonical BRAND pair-count frame (u < v, n = orders sharing the
@@ -1008,13 +1007,12 @@ def _brand_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transform(slice(brands, i + 2, size(brands)), "
         "y -> struct(x AS src, y AS dst))))"
     )
-    return (
+    return session.stage(
         _brand_baskets(spark, sf_dir)
         .select(F.explode(pair_list).alias("pr"))
         .groupBy(F.col("pr.src").alias("u"), F.col("pr.dst").alias("v"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
+    )[0]
 
 
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

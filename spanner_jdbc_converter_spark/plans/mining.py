@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spanner_jdbc_converter_spark import session
 from spanner_jdbc_converter_spark.catalog import load_table
 from spanner_jdbc_converter_spark.operators import clustering as cl
 from spanner_jdbc_converter_spark.operators import text as tx
@@ -1428,14 +1429,11 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-by-row.  See operators/text.py::bpe_segment /
     unigram_lm_learn."""
     d = load_table(spark, sf_dir, "documents")
-    sw = (
+    (sw,) = session.stage(
         d.select("source", F.explode(tx.tokens("text")).alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    from spanner_jdbc_converter_spark.operators.dedup import _stage_checkpoint
-
-    sw = _stage_checkpoint(sw)
 
     def side(seg: DataFrame, tag: str) -> DataFrame:
         return (

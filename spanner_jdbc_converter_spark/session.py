@@ -24,7 +24,7 @@ import os
 import threading
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -57,9 +57,93 @@ def session_shuffle_width(spark: SparkSession) -> int:
 
 
 #: Held while a thread flips session-global SQL conf (planning_scale_rounds)
-#: or runs jobs on other driver threads (dedup._stage_checkpoints_overlapped),
-#: so neither runs while the other is active; the holder may nest both.
+#: or runs jobs on other driver threads (stage), so neither runs while the
+#: other is active; the holder may nest both.
 SESSION_CONF_LOCK = threading.RLock()
+
+
+def stage(*frames: DataFrame) -> tuple[DataFrame, ...]:
+    """Materialize each frame now and cut its lineage; returns the
+    checkpointed frames in argument order.  This is the one eager stage
+    barrier of the package: operators call it on a frame that feeds
+    several consumers, or on a loop round whose plan would otherwise
+    grow with every iteration.
+
+    Checkpoints are executor-local: they need no configuration and are
+    cleaned up with the session, while reliable ones leak files unless
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set.
+
+    Several frames are checkpointed at the same time, one driver thread
+    each: an eager checkpoint blocks its thread, and the scheduler can
+    back-fill one job's straggler tail with another's tasks, so the wall
+    is the slowest job rather than the sum.  Callers pass only frames
+    that do not read one another.  The threads are
+    ``pyspark.InheritableThread`` so their jobs keep the caller's job
+    group, tags and scheduler pool.  The calling thread holds
+    SESSION_CONF_LOCK while they run, so a :func:`planning_scale_rounds`
+    scope on another thread cannot switch AQE off under these jobs.  If
+    several frames fail, the first error is raised with the others
+    attached as notes."""
+    if len(frames) == 1:
+        return (frames[0].localCheckpoint(eager=True),)
+    from pyspark import InheritableThread
+
+    results: list = [None] * len(frames)
+    errors: list[BaseException] = []
+
+    def _run(i: int, df: DataFrame) -> None:
+        try:
+            results[i] = df.localCheckpoint(eager=True)
+        except BaseException as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+
+    threads = [
+        InheritableThread(target=_run, args=(i, df)) for i, df in enumerate(frames)
+    ]
+    with SESSION_CONF_LOCK:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    if errors:
+        first, *rest = errors
+        for other in rest:
+            first.add_note(
+                f"another staged frame also failed: {type(other).__name__}: {other}"
+            )
+        raise first
+    return tuple(results)
+
+
+def stats_reset_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager local checkpoint whose optimizer size estimate is reset.
+
+    Spark's checkpoint keeps the size estimate on the new LogicalRDD,
+    and a join's estimate is the product of its children's.  A loop
+    whose round reaches the previous frame through two or more joins
+    therefore grows the estimate geometrically per round; after ~15
+    rounds Catalyst spends its time multiplying million-digit
+    BigIntegers on flat data and flat plans.  Re-wrapping the
+    materialized checkpoint RDD in a fresh LogicalRDD drops the
+    estimate back to the default: no extra job, same blocks.
+
+    The re-wrap calls two JVM ``private[sql]`` members (public in
+    bytecode), ``SparkSession.internalCreateDataFrame`` and
+    ``QueryExecution.toRdd``.  If a Spark upgrade renames either, py4j
+    raises ``Py4JError`` and the plain checkpoint is returned: deep loops
+    get slower rounds, never wrong results."""
+    from py4j.protocol import Py4JError
+
+    spark = df.sparkSession
+    out = df.localCheckpoint(eager=True)
+    try:
+        jdf = out._jdf
+        fresh = spark._jsparkSession.internalCreateDataFrame(
+            jdf.queryExecution().toRdd(), jdf.schema(), False
+        )
+    except Py4JError:
+        return out
+    return DataFrame(fresh, spark)
 
 
 @contextmanager

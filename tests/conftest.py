@@ -27,3 +27,38 @@ def duck(sf_dir):
     con = duckdb_connection(sf_dir)
     yield con
     con.close()
+
+
+@pytest.fixture
+def lazy_stages(monkeypatch):
+    """Make ``session.stage`` the identity for one test, so an operator's
+    plan shows its whole pipeline instead of checkpoint scans."""
+    from spanner_jdbc_converter_spark import session
+
+    monkeypatch.setattr(session, "stage", lambda *frames: frames)
+
+
+@pytest.fixture
+def connected_groups_rounds(monkeypatch):
+    """``run(pairs, **kw)`` returns ``(dedup.connected_groups(pairs, **kw),
+    rounds)``.  Rounds are counted from the stats-reset checkpoints the
+    call makes: the first canonicalizes the edges, each later one ends a
+    round."""
+    from spanner_jdbc_converter_spark import session
+    from spanner_jdbc_converter_spark.operators import dedup as dd
+
+    calls = []
+    real = session.stats_reset_checkpoint
+
+    def counted(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(session, "stats_reset_checkpoint", counted)
+
+    def run(pairs, **kw):
+        calls.clear()
+        groups = dd.connected_groups(pairs, **kw)
+        return groups, len(calls) - 1
+
+    return run

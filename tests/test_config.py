@@ -224,6 +224,35 @@ def test_no_hand_rolled_session_store():
     assert not offenders, f"hand-rolled session keying in {offenders}"
 
 
+def test_lineage_cuts_live_in_session_only():
+    """Eager lineage cuts go through session.stage (or the stats-reset
+    cut beside it): no other package module calls localCheckpoint or
+    checkpoint, and no function takes an option that turns the cut off
+    or makes it reliable."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "spanner_jdbc_converter_spark"
+    cuts, options = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        where = path.relative_to(pkg)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+                and path.name != "session.py"
+            ):
+                cuts.append(f"{where}:{node.lineno}")
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                if names & {"materialize", "reliable", "reliable_checkpoints"}:
+                    options.append(f"{where}:{node.name}")
+    assert not cuts, f"lineage cuts outside session.py: {cuts}"
+    assert not options, f"stage on/off or reliable options: {options}"
+
+
 def test_prime_session_caches_populates_every_store(spark, sf_dir):
     """Functional half of the primer contract: one prime_session_caches
     call at the test fixture scale must leave every registered store

@@ -227,7 +227,8 @@ def test_sinks_agree_on_every_convert_mode_cell(
     """Every ddl_mode × data_mode cell against an absent, an empty and a
     non-empty destination gives the same report, the same raise-or-not
     and the same final row count on the parquet sink and on a live
-    JDBC database, and a destination changes only when it is copied."""
+    JDBC database.  A destination changes only when it is copied or
+    dropped; a dropped one the data phase skips ends empty."""
     from spanner_jdbc_converter_spark.converter import (
         convert_table,
         convert_table_jdbc,
@@ -264,7 +265,9 @@ def test_sinks_agree_on_every_convert_mode_cell(
         )
         assert parquet_rows == jdbc_rows, state
         copied = parquet != "raised" and parquet[2] == "copied"
-        assert parquet_rows == (n_source if copied else before), state
+        dropped = parquet != "raised" and parquet[0] == "dropped_and_recreated"
+        want = n_source if copied else 0 if dropped else before
+        assert parquet_rows == want, state
 
 
 def test_drop_and_recreate_probes_each_destination_once(spark, sf_dir, tmp_path, monkeypatch):

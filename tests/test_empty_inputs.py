@@ -429,7 +429,7 @@ def test_silhouette_report_empty_and_k_exceeds_corpus(spark):
     from spanner_jdbc_converter_spark.operators import clustering as cl
 
     empty = spark.createDataFrame([], EMB_SCHEMA)
-    out = cl.silhouette_report(empty, k=4, iters=2, materialize=False)
+    out = cl.silhouette_report(empty, k=4, iters=2)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "cluster", "n_points", "mean_silhouette",
@@ -439,7 +439,7 @@ def test_silhouette_report_empty_and_k_exceeds_corpus(spark):
         [(0, [0.0, 0.0]), (1, [4.0, 0.0]), (2, [0.0, 4.0])], EMB_SCHEMA
     )
     rows = (
-        cl.silhouette_report(pts, k=10, iters=2, materialize=False)
+        cl.silhouette_report(pts, k=10, iters=2)
         .orderBy("cluster")
         .collect()
     )
@@ -502,7 +502,7 @@ def test_lsh_operating_report_empty(spark):
     from spanner_jdbc_converter_spark.operators import dedup as dd
 
     rows = dd.lsh_operating_report(
-        spark.createDataFrame([], DOC_SCHEMA), materialize=False
+        spark.createDataFrame([], DOC_SCHEMA)
     ).orderBy("band_lo").collect()
     assert [r.band_lo for r in rows] == [0.0, 0.5, 0.6, 0.7, 0.8, 0.9]
     assert all(
@@ -519,7 +519,7 @@ def test_lsh_operating_report_single_doc(spark):
     one = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta", "web")], DOC_SCHEMA
     )
-    rows = dd.lsh_operating_report(one, materialize=False).orderBy("band_lo").collect()
+    rows = dd.lsh_operating_report(one).orderBy("band_lo").collect()
     assert [r.band_lo for r in rows] == [0.0, 0.5, 0.6, 0.7, 0.8, 0.9]
     assert all(
         (r.n_true, r.n_caught, r.catch_rate, r.n_cand) == (0, 0, 0.0, 0)

@@ -571,7 +571,7 @@ def test_connected_groups_deep_chain(spark):
     assert {r.group_id for r in out} == {0}
 
 
-def test_fused_round_probe_equivalence(spark):
+def test_fused_round_probe_equivalence(spark, connected_groups_rounds):
     """r18 (VERDICT r17 "Next round #5"): the fused large+small-star
     round keeps ONE probe per round; it must converge in the SAME round
     count and produce the SAME groups as the two-probe (per-phase
@@ -583,6 +583,8 @@ def test_fused_round_probe_equivalence(spark):
     edges."""
     from pyspark.sql import Observation
 
+    from spanner_jdbc_converter_spark import session
+
     probe_sum = F.sum(
         F.col("a").cast("decimal(38,0)") + F.col("b").cast("decimal(38,0)")
     ).alias("s")
@@ -591,7 +593,7 @@ def test_fused_round_probe_equivalence(spark):
     def two_probe_reference(pairs, max_iters=60):
         def _ckpt(df):
             obs = Observation()
-            out = dd._stats_reset_checkpoint(
+            out = session.stats_reset_checkpoint(
                 df.observe(obs, probe_sum, probe_cnt)
             )
             got = obs.get
@@ -671,10 +673,11 @@ def test_fused_round_probe_equivalence(spark):
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         ref, ref_rounds = two_probe_reference(df)
         want = sorted(map(tuple, ref.collect()))
-        got = sorted(map(tuple, dd.connected_groups(df).collect()))
+        groups, rounds = connected_groups_rounds(df)
+        got = sorted(map(tuple, groups.collect()))
         assert got == want, name
-        assert dd._LAST_CC_ROUNDS == ref_rounds, (
-            f"{name}: fused round count {dd._LAST_CC_ROUNDS} != "
+        assert rounds == ref_rounds, (
+            f"{name}: fused round count {rounds} != "
             f"two-probe reference {ref_rounds}"
         )
 
@@ -1415,7 +1418,7 @@ def test_incremental_near_dedup_signature_state_loop(spark, tmp_path):
     assert sorted(ids) == sorted(set(ids)) == sorted(r.doc_id for r in corpus2.select("doc_id").collect())
 
 
-def test_incremental_near_dedup_state_never_rehashes_corpus(spark, tmp_path):
+def test_incremental_near_dedup_state_never_rehashes_corpus(spark, tmp_path, lazy_stages):
     """'Corpus signatures are computed exactly once' made checkable: the
     signature frame LSH banding consumes (_increment_signatures) has
     ZERO corpus-parquet scans when corpus_state is supplied — the
@@ -1456,16 +1459,14 @@ def test_incremental_near_dedup_state_never_rehashes_corpus(spark, tmp_path):
         dd._increment_signatures(union, batch, None, "text", "doc_id", dd.MINHASH_K)
     ) >= 1  # stateless: the signature chain DOES read corpus text
 
-    with_state = dd.incremental_near_dedup(
-        corpus_pq, batch, corpus_state=state, materialize=False
-    )
-    stateless = dd.incremental_near_dedup(corpus_pq, batch, materialize=False)
+    with_state = dd.incremental_near_dedup(corpus_pq, batch, corpus_state=state)
+    stateless = dd.incremental_near_dedup(corpus_pq, batch)
     assert corpus_scans(with_state) < corpus_scans(stateless)
 
 
 def test_incremental_near_dedup_id_overlap_fails_fast(spark):
     """ADVICE r7: a batch doc reusing a corpus doc's id would silently
-    escape candidate pairing — the materialized path must refuse."""
+    escape candidate pairing — the operator must refuse."""
     schema = "doc_id long, text string, source string"
     corpus = spark.createDataFrame([(1, "corpus doc one text", "s")], schema)
     batch = spark.createDataFrame(
@@ -1809,7 +1810,7 @@ def test_bpe_merges_property(spark, words):
     d = spark.createDataFrame([(0, " ".join(words))], "doc_id long, text string")
     got = [
         (r.left_sym, r.right_sym, r.merged, r.pair_count)
-        for r in tx.bpe_merges(d, rounds=3, materialize=False).orderBy("rank").collect()
+        for r in tx.bpe_merges(d, rounds=3).orderBy("rank").collect()
     ]
     assert got == [(a, b, m, c) for a, b, m, c in _py_bpe(counts, 3)]
 
@@ -1926,38 +1927,34 @@ def test_span_pos_hashes_match_window_reference(spark):
 
 
 def test_overlapped_checkpoints_match_sequential(spark):
-    """_stage_checkpoints_overlapped materializes INDEPENDENT frames
-    concurrently (r17: the recall report's exact/ADC/residual barriers)
-    — contents must match the inputs exactly, lineage must be truncated
-    to a checkpoint scan, and the single-frame fast path must hold."""
-    from spanner_jdbc_converter_spark.operators.dedup import (
-        _stage_checkpoints_overlapped,
-    )
+    """session.stage materializes several INDEPENDENT frames
+    concurrently (the recall report's exact/ADC/residual barriers) —
+    contents must match the inputs exactly, lineage must be truncated
+    to a checkpoint scan, and the single-frame path must hold."""
+    from spanner_jdbc_converter_spark.session import stage
 
     a = spark.range(0, 100).selectExpr("id", "id * 2 AS v")
     b = spark.range(0, 50).selectExpr("id", "id % 7 AS w")
     c = spark.range(0, 10).selectExpr("id")
-    ca, cb, cc = _stage_checkpoints_overlapped(a, b, c)
+    ca, cb, cc = stage(a, b, c)
     assert sorted(map(tuple, ca.collect())) == sorted(map(tuple, a.collect()))
     assert sorted(map(tuple, cb.collect())) == sorted(map(tuple, b.collect()))
     assert sorted(map(tuple, cc.collect())) == sorted(map(tuple, c.collect()))
     for chk in (ca, cb, cc):
         assert "Scan ExistingRDD" in chk._jdf.queryExecution().executedPlan().toString()
-    (only,) = _stage_checkpoints_overlapped(a)
+    (only,) = stage(a)
     assert only.count() == 100
 
 
 def test_overlapped_checkpoints_report_every_failure(spark):
     """When several overlapped frames fail, the raised error names all
     of them, not only the first to finish."""
-    from spanner_jdbc_converter_spark.operators.dedup import (
-        _stage_checkpoints_overlapped,
-    )
+    from spanner_jdbc_converter_spark.session import stage
 
     a = spark.range(1).select(F.raise_error(F.lit("overlap-boom-a")))
     b = spark.range(1).select(F.raise_error(F.lit("overlap-boom-b")))
     with pytest.raises(Exception) as info:
-        _stage_checkpoints_overlapped(a, b)
+        stage(a, b)
     text = str(info.value) + "\n".join(getattr(info.value, "__notes__", []))
     assert "overlap-boom-a" in text and "overlap-boom-b" in text
 
@@ -1969,15 +1966,12 @@ def test_overlapped_checkpoints_wait_for_an_aqe_off_scope(spark):
     import threading
     import time
 
-    from spanner_jdbc_converter_spark.operators.dedup import (
-        _stage_checkpoints_overlapped,
-    )
-    from spanner_jdbc_converter_spark.session import planning_scale_rounds
+    from spanner_jdbc_converter_spark.session import planning_scale_rounds, stage
 
     finished = []
 
     def overlapped():
-        _stage_checkpoints_overlapped(spark.range(10), spark.range(20))
+        stage(spark.range(10), spark.range(20))
         finished.append(time.monotonic())
 
     with planning_scale_rounds(spark):
@@ -2447,9 +2441,7 @@ def test_residual_ivfpq_beats_nonresidual_on_clustered_corpus(spark):
     queries = corpus.filter(F.col("vec_id") % 20 == 0)
     rows = {
         r.method: r.recall
-        for r in sim.ann_recall_report(
-            queries, corpus, k=10, materialize=False
-        ).collect()
+        for r in sim.ann_recall_report(queries, corpus, k=10).collect()
     }
     assert rows["ivfpq_residual"] >= rows["ivfpq"], rows
     assert rows["ivfpq_residual"] > 0.0
@@ -2747,7 +2739,7 @@ def test_greedy_segment_longest_match_and_boundaries(spark):
     assert got["cab"] == ["c", "ab"]
 
 
-def test_connected_groups_deep_chain_flat_rounds_and_guard(spark):
+def test_connected_groups_deep_chain_flat_rounds_and_guard(spark, connected_groups_rounds):
     """Round-13/14 regression: (a) a deep chain (400 nodes, monotone
     ids — linear-in-diameter for the old min-label propagation)
     converges within the default budget and labels every node with the
@@ -2767,12 +2759,13 @@ def test_connected_groups_deep_chain_flat_rounds_and_guard(spark):
         [(i, i + 1) for i in range(400)], "id_a long, id_b long"
     )
     t0 = time.time()
-    rows = dd.connected_groups(chain).collect()
+    groups, rounds = connected_groups_rounds(chain)
+    rows = groups.collect()
     wall = time.time() - t0
     assert {r.doc_id for r in rows} == set(range(401))
     assert all(r.group_id == 0 for r in rows)
-    assert dd._LAST_CC_ROUNDS <= 2 * math.log2(401), (
-        f"{dd._LAST_CC_ROUNDS} rounds on a 401-node chain — star "
+    assert rounds <= 2 * math.log2(401), (
+        f"{rounds} rounds on a 401-node chain — star "
         "contraction should close it in ~log2(n)"
     )
     # log-bounded rounds at flat cost finish comfortably; the

@@ -366,12 +366,12 @@ def test_sampled_quantiles_sample_filter_before_agg(spark, sf_dir):
     assert "% 16) = 0" in plan or "% 16 = 0" in plan.replace("(", "").replace(")", "")
 
 
-def test_incremental_dedup_batch_sided_candidates(spark, sf_dir):
+def test_incremental_dedup_batch_sided_candidates(spark, sf_dir, lazy_stages):
     """The increment path never enumerates corpus x corpus pairs: the
     band join's left side is the (broadcast-filtered) batch banding and
-    nothing is a cartesian.  Inspect the LAZY form (materialize=False) —
-    the registered entry's eager stage checkpoints would hide the
-    candidate pipeline behind ExistingRDD scans and make this vacuous."""
+    nothing is a cartesian.  Inspect the LAZY form (lazy_stages) — the
+    registered entry's eager stage checkpoints would hide the candidate
+    pipeline behind ExistingRDD scans and make this vacuous."""
     from pyspark.sql import functions as F
 
     from spanner_jdbc_converter_spark.catalog import load_table
@@ -381,7 +381,6 @@ def test_incremental_dedup_batch_sided_candidates(spark, sf_dir):
     lazy = dd.incremental_near_dedup(
         d.filter(F.col("doc_id") % 5 != 0),
         d.filter(F.col("doc_id") % 5 == 0),
-        materialize=False,
     )
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     plan = lazy._jdf.queryExecution().explainString(jmode)
@@ -434,7 +433,7 @@ def test_incremental_dedup_stage1_no_corpus_exchange(spark, sf_dir, tmp_path):
     assert head.count("Scan parquet") == 1  # the ONE corpus-metadata pass
 
 
-def test_semantic_dedup_is_cluster_bucketed(spark, sf_dir):
+def test_semantic_dedup_is_cluster_bucketed(spark, sf_dir, lazy_stages):
     """SemDedup's pair work must be the cluster-packed numpy kernel —
     one groupBy(cluster) pack feeding MapInPandas — never a pair-level
     join; the only nested-loop joins are the K-row centroid broadcasts
@@ -444,7 +443,7 @@ def test_semantic_dedup_is_cluster_bucketed(spark, sf_dir):
     from spanner_jdbc_converter_spark.operators import clustering as cl
 
     emb = load_table(spark, sf_dir, "embeddings")
-    lazy = cl.semantic_dedup(emb, materialize=False)
+    lazy = cl.semantic_dedup(emb)
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     plan = lazy._jdf.queryExecution().explainString(jmode)
     head = plan.split("\n\n")[0]
@@ -555,7 +554,7 @@ def test_q20_part_filter_below_both_aggregates(spark, sf_dir):
     assert "BroadcastHashJoin" in phys
 
 
-def test_bpe_merges_winner_broadcast_no_vocab_shuffle_join(spark, sf_dir):
+def test_bpe_merges_winner_broadcast_no_vocab_shuffle_join(spark, sf_dir, lazy_stages):
     """Each BPE round's winning pair must reach the vocabulary fold as a
     broadcast one-row frame — a shuffled join of the vocab against the
     arg-max (SortMergeJoin) or a real cartesian would be the regression.
@@ -565,7 +564,7 @@ def test_bpe_merges_winner_broadcast_no_vocab_shuffle_join(spark, sf_dir):
     from spanner_jdbc_converter_spark.operators.text import bpe_merges
 
     d = load_table(spark, sf_dir, "documents")
-    df = bpe_merges(d, rounds=2, materialize=False)
+    df = bpe_merges(d, rounds=2)
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
@@ -669,28 +668,32 @@ def test_dsir_model_broadcast_and_banded_rank(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # the lazy plan (scoring pipeline visible) keeps the same contract:
-    # the h-keyed model join must be broadcast, never sort-merge
-    from spanner_jdbc_converter_spark.catalog import load_table
-    from spanner_jdbc_converter_spark.operators.text import dsir_importance
-
-    lazy = dsir_importance(
-        load_table(spark, sf_dir, "documents"), materialize=False
-    )
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    lplan = lazy._jdf.queryExecution().explainString(jmode)
-    assert "CartesianProduct" not in lplan
-    assert "SortMergeJoin" not in lplan
     import inspect
+
+    from spanner_jdbc_converter_spark.operators.text import dsir_importance
 
     src = inspect.getsource(dsir_importance)
     # forced broadcasts: totals (one row), the 8192-row model, the
     # per-source count frame — and the rank comes from banded_rank,
     # with the reused per-doc frame checkpointed
     assert "F.broadcast(lw)" in src and "F.broadcast(ns)" in src
-    assert "banded_rank(" in src and "_stage_checkpoint(per)" in src
+    assert "banded_rank(" in src and "session.stage(per)" in src
+
+
+def test_dsir_lazy_plan_keeps_the_scale_contract(spark, sf_dir, lazy_stages):
+    """The lazy DSIR plan (scoring pipeline visible) keeps the same
+    contract: the h-keyed model join must be broadcast, never
+    sort-merge, and nothing is a cartesian."""
+    from spanner_jdbc_converter_spark.catalog import load_table
+    from spanner_jdbc_converter_spark.operators.text import dsir_importance
+
+    lazy = dsir_importance(load_table(spark, sf_dir, "documents"))
+    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    lplan = lazy._jdf.queryExecution().explainString(jmode)
+    assert "CartesianProduct" not in lplan
+    assert "SortMergeJoin" not in lplan
 
 
 def test_kcenter_coreset_rounds_read_cache_not_lineage(spark):
@@ -1115,13 +1118,13 @@ def test_intradoc_scrub_id_keyed_no_joins_beyond_starts(spark, sf_dir):
 
 
 def test_shuffle_width_falls_back_on_non_integer_conf(spark):
-    """`extensions._shuffle_width` must survive sessions whose
+    """`session_shuffle_width` must survive sessions whose
     spark.sql.shuffle.partitions is not a plain integer ("auto" under
     AQE-managed platforms) by falling back to defaultParallelism
     (ADVICE r15)."""
-    from spanner_jdbc_converter_spark.plans.extensions import _shuffle_width
+    from spanner_jdbc_converter_spark.session import session_shuffle_width
 
-    assert _shuffle_width(spark) == int(
+    assert session_shuffle_width(spark) == int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
 
@@ -1133,7 +1136,7 @@ def test_shuffle_width_falls_back_on_non_integer_conf(spark):
         conf = _Conf()
         sparkContext = spark.sparkContext
 
-    assert _shuffle_width(_Stub()) == spark.sparkContext.defaultParallelism
+    assert session_shuffle_width(_Stub()) == spark.sparkContext.defaultParallelism
 
 
 def test_ivfpq_refine_adds_only_broadcasts_and_one_rank_exchange(spark, sf_dir):

@@ -99,7 +99,7 @@ def test_sessionization_at_10x_events(spark):
     assert wall < 120, f"sessionization at 10x took {wall:.0f}s"
 
 
-def test_connected_groups_deep_components_at_scale(spark):
+def test_connected_groups_deep_components_at_scale(spark, connected_groups_rounds):
     """Connected components on a synthetic graph with DEEP chains —
     the shape that breaks naive propagation: 2,000 chains × depth 64
     (128k nodes) plus 10k star clusters, plus one ADVERSARIAL-id chain:
@@ -110,8 +110,6 @@ def test_connected_groups_deep_components_at_scale(spark):
     everything in O(log n) rounds regardless — naive min-label would
     need ~1,024."""
     import math
-
-    from spanner_jdbc_converter_spark.operators import dedup as dd
 
     chains = (
         spark.range(2_000)
@@ -138,15 +136,17 @@ def test_connected_groups_deep_components_at_scale(spark):
         "id_a long, id_b long",
     )
     t0 = time.time()
-    groups = dd.connected_groups(chains.unionByName(stars).unionByName(adv))
+    groups, rounds = connected_groups_rounds(
+        chains.unionByName(stars).unionByName(adv)
+    )
     n_groups = groups.select("group_id").distinct().count()
     n_nodes = groups.count()
     wall = time.time() - t0
     assert n_groups == 2_000 + 10_000 + 1
     assert n_nodes == 2_000 * 64 + 10_000 * 5 + (1 << BITS)
     n_total = 2_000 * 64 + 10_000 * 5 + (1 << BITS)
-    assert dd._LAST_CC_ROUNDS <= 2 * math.log2(n_total), (
-        f"{dd._LAST_CC_ROUNDS} rounds — star contraction lost its log bound"
+    assert rounds <= 2 * math.log2(n_total), (
+        f"{rounds} rounds — star contraction lost its log bound"
     )
     # every chain head (id ≡ 0 mod 1e6) is its own group's label
     bad = groups.filter(
