@@ -91,13 +91,13 @@ def _convert_phases(
     called only to size the delete; ``write(frame)`` replaces the
     destination with ``frame``.  It gets the source if the table is
     copied, and an empty frame of the source schema if the DDL phase
-    drops an existing table that the data phase then skips, so the
-    recreated table ends empty as in the reference."""
+    creates or drops a table that the data phase then skips, so the
+    table exists and is empty as in the reference."""
     report = TableConversionReport(table=table)
     exists, empty = state
 
     # -- DDL phase (REF/ddl/TableConverter.java:176-204) --------------------
-    dropped = False
+    fresh = False  # the DDL phase created or recreated the table
     if ddl_mode is not ConvertMode.SKIP_ALL:
         refuse_existing(ddl_mode, empty, destination)
         pk = primary_key if primary_key is not None else list(PRIMARY_KEYS.get(table, ()))
@@ -105,13 +105,14 @@ def _convert_phases(
         if not exists:
             report.ddl_action = "created"
             report.ddl = [create_table_ddl(spec, dialect, overrides=type_overrides)]
+            fresh = True  # a write below realizes the create
         elif ddl_mode is ConvertMode.DROP_AND_RECREATE:
             report.ddl_action = "dropped_and_recreated"
             report.ddl = [
                 drop_table_ddl(table),
                 create_table_ddl(spec, dialect, overrides=type_overrides),
             ]
-            dropped = empty = True  # a write below realizes the drop
+            fresh = empty = True  # a write below realizes the drop
 
     # -- delete phase (REF/Converter.java:76-79) ----------------------------
     if data_mode is ConvertMode.DROP_AND_RECREATE and not empty:
@@ -122,12 +123,12 @@ def _convert_phases(
 
     # -- copy phase (REF/data/DataCopier.java:45-85) ------------------------
     copy_mode = data_mode
-    if dropped and data_mode is not ConvertMode.SKIP_ALL:
+    if fresh and data_mode is not ConvertMode.SKIP_ALL:
         copy_mode = ConvertMode.DROP_AND_RECREATE  # fresh table: always load
     if should_copy_data(copy_mode, empty, destination):
         report.result = write(source)
         report.data_action = "copied"
-    elif dropped:
+    elif fresh:
         write(source.sparkSession.createDataFrame([], source.schema))
     return report
 

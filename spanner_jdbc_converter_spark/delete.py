@@ -8,14 +8,16 @@ DeleteWorker per range, each deleting row-at-a-time by PK
 (REF/data/DeleteWorker.java:42-115).
 
 Spark restatement: deletes over immutable columnar storage are rewrites —
-``survivors = target ANTI-JOIN doomed`` (or a negated pushed-down range
-predicate) written back.  Boundary sampling becomes ``approxQuantile``;
-the composite-key range predicate uses *correct* lexicographic semantics
+``survivors = target ANTI-JOIN doomed`` written back
+(:func:`delete_pipeline`).  The reference's range planning survives as
+building blocks for range deletes and JDBC pushdown: boundary sampling
+becomes a range repartition (:func:`plan_delete_ranges`), and the
+composite-key range predicate uses *correct* lexicographic semantics
 (the reference's conjunctive per-column form binds wrongly for composite
 PKs, REF/data/DeleteWorker.java:91-96 — bug catalogued SURVEY.md §5.2).
 
 At 100 TB: the anti-join broadcasts the doomed key set when small; the
-range-predicate path never shuffles at all (partition-pruned overwrite).
+range-predicate path (:func:`delete_by_range`) never shuffles at all.
 """
 
 from __future__ import annotations
@@ -142,8 +144,11 @@ def delete_by_range(df: DataFrame, pk_cols: list[str], ranges: list[DeleteRange]
 def delete_by_keys(target: DataFrame, doomed_keys: DataFrame, pk_cols: list[str]) -> DataFrame:
     """P5/W5: delete-by-key as a left-anti join (the reference's per-row
     ``DELETE WHERE pk=?`` loop, REF/data/DeleteWorker.java:52-61).  Small
-    key sets broadcast automatically."""
-    return target.join(doomed_keys.select(*pk_cols), on=pk_cols, how="left_anti")
+    key sets broadcast automatically.  The survivors keep the target's
+    column order: a join on column names moves the keys to the front,
+    and a positional writer or reader would then misplace them."""
+    survivors = target.join(doomed_keys.select(*pk_cols), on=pk_cols, how="left_anti")
+    return survivors.select(*target.columns)
 
 
 def delete_strategy(record_count: int) -> str:
@@ -157,30 +162,14 @@ def delete_pipeline(
     doomed_keys: DataFrame,
     num_workers: int = 10,
 ) -> DataFrame:
-    """Full delete flow: threshold probe → single-shot or ranged plan →
-    survivors frame (caller overwrites storage with it).
+    """Full delete flow: the survivors frame (caller overwrites storage
+    with it), one anti-join whatever the number of doomed keys.
 
-    The ranged path exists for JDBC sinks where each range becomes one
-    pushed ``DELETE WHERE <range-sql>``; over parquet both paths reduce
-    to one anti-join rewrite.
+    The reference forks on :func:`delete_strategy` because a JDBC sink
+    deletes in place, one statement per key range.  A rewrite reads the
+    target once either way: a ranged plan only adds a key-range sampling
+    job and a second scan of the in-range rows, for the same survivors.
+    ``num_workers`` is accepted for callers that still pass the
+    reference's worker count; it has no effect.
     """
-    n_doomed = doomed_keys.count()
-    if n_doomed == 0:
-        return target
-    if delete_strategy(n_doomed) == "single_statement":
-        return delete_by_keys(target, doomed_keys, pk_cols)
-    ranges = plan_delete_ranges(doomed_keys, pk_cols, num_workers)
-    # Ranges bound contiguous *sampled* key runs of doomed rows; rows inside
-    # a range that are not doomed must survive, so the precise path is still
-    # the anti-join — ranges only narrow the scan (partition pruning).
-    pruned = delete_by_range(target, pk_cols, ranges)
-    # Filter with the OR of range predicates (complement of delete_by_range)
-    # rather than target.subtract(pruned): subtract is EXCEPT DISTINCT and
-    # would collapse duplicate rows inside the ranges.
-    in_pred = None
-    for r in ranges:
-        p = lexicographic_range_predicate(pk_cols, r.begin_key, r.end_key)
-        in_pred = p if in_pred is None else (in_pred | p)
-    in_ranges = target.filter(in_pred)
-    survivors_in_ranges = delete_by_keys(in_ranges, doomed_keys, pk_cols)
-    return pruned.unionByName(survivors_in_ranges)
+    return delete_by_keys(target, doomed_keys, pk_cols)

@@ -236,7 +236,6 @@ def kcenter_coreset(
     k: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _debug_rounds: list | None = None,
 ) -> DataFrame:
     """Farthest-point-sampling k-center coreset (Gonzalez 1985): seed at
     the min id, then k−1 rounds of "pick the point farthest (squared
@@ -263,12 +262,6 @@ def kcenter_coreset(
     survivor snapshots are cached at any moment.  Caching changes no
     values: the expressions are identical, only recomputation is
     avoided.
-
-    ``_debug_rounds`` (tests only): a list that receives each round's
-    survivor frame's FORMATTED physical-plan string, captured while the
-    predecessor is still persisted, so plan tests can lock the
-    cache-read shape (the frames themselves are unpersisted before
-    return, which would re-plan without the cache substitution).
 
     Output: (id, center_rank 1..k, mindist — the selection distance,
     0.0 for the seed; raw IEEE doubles, deterministic).  k larger than
@@ -303,13 +296,6 @@ def kcenter_coreset(
     try:
         with planning_scale_rounds(spark):
             for t in range(2, k + 1):
-                if _debug_rounds is not None:
-                    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(  # noqa: E501
-                        "formatted"
-                    )
-                    _debug_rounds.append(
-                        cur._jdf.queryExecution().explainString(jmode)
-                    )
                 # TakeOrdered touches every partition, so this action fully
                 # populates cur's cache — the predecessor is then safe to drop.
                 row = cur.orderBy(F.desc("mind"), F.asc(id_col)).first()
@@ -572,7 +558,6 @@ def power_iteration_pc1(
     dim: int = 64,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    _debug_rounds: list | None = None,
 ) -> DataFrame:
     """Leading principal component of the (centered) embedding matrix by
     fixed-iteration power iteration — the dimensionality-reduction /
@@ -612,30 +597,31 @@ def power_iteration_pc1(
         "pos long, mu double, pc1 double, eigval double, n_vecs long"
     )
     x = emb.select(F.col(vec_col).alias("__x")).persist()
-    with planning_scale_rounds(spark):
-        stats = (
-            x.select(F.posexplode(F.col("__x")).alias("pos", "__v"))
-            .select("pos", F.col("__v").cast("double").alias("__v"))
-            .groupBy("pos")
-            .agg(
-                (
-                    F.sum(F.col("__v").cast(_DEC)).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("mu"),
-                F.count(F.lit(1)).alias("n"),
+    try:
+        with planning_scale_rounds(spark):
+            stats = (
+                x.select(F.posexplode(F.col("__x")).alias("pos", "__v"))
+                .select("pos", F.col("__v").cast("double").alias("__v"))
+                .groupBy("pos")
+                .agg(
+                    (
+                        F.sum(F.col("__v").cast(_DEC)).cast("double")
+                        / F.count(F.lit(1))
+                    ).alias("mu"),
+                    F.count(F.lit(1)).alias("n"),
+                )
+                .collect()
             )
-            .collect()
-        )
-        if not stats:
-            x.unpersist()
-            return spark.createDataFrame([], out_schema)
-        mu = [0.0] * dim
-        n = 0
-        for r in stats:
-            mu[int(r["pos"])] = float(r["mu"])
-            n = int(r["n"])
-        v, eigval = _pi_rounds(x, mu, n, iters, dim, _debug_rounds=_debug_rounds)
-    x.unpersist()
+            if not stats:
+                return spark.createDataFrame([], out_schema)
+            mu = [0.0] * dim
+            n = 0
+            for r in stats:
+                mu[int(r["pos"])] = float(r["mu"])
+                n = int(r["n"])
+            v, eigval = _pi_rounds(x, mu, n, iters, dim)
+    finally:
+        x.unpersist()
     out = spark.createDataFrame(
         [(d, mu[d], v[d], eigval, n) for d in range(dim)], out_schema
     )
@@ -665,7 +651,6 @@ def _pi_rounds(
     iters: int,
     dim: int,
     v1: list | None = None,
-    _debug_rounds: list | None = None,
 ) -> tuple[list, float]:
     """Shared power-iteration loop over a persisted single-column frame
     ``x`` (column __x): returns (unit direction, Rayleigh eigenvalue).
@@ -737,13 +722,6 @@ def _pi_rounds(
             .groupBy("pos")
             .agg(F.sum(F.col("__t").cast(_DEC)).cast("double").alias("w"))
         )
-        if _debug_rounds is not None:
-            jmode = x.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(  # noqa: E501
-                "simple"
-            )
-            _debug_rounds.append(
-                upd._jdf.queryExecution().explainString(jmode)
-            )
         rows = upd.collect()
         w = [0.0] * dim
         for r in rows:
@@ -765,7 +743,6 @@ def _centered_pi2(
     x: DataFrame,
     iters: int,
     dim: int,
-    _debug_rounds: list | None = None,
 ) -> tuple[list, int, list, float, list, float] | None:
     """The ONE centering + two-direction power-iteration chain both
     pca2 surfaces consume (review r17 — previously duplicated verbatim,
@@ -797,10 +774,8 @@ def _centered_pi2(
         for r in stats:
             mu[int(r["pos"])] = float(r["mu"])
             n = int(r["n"])
-        v1, eig1 = _pi_rounds(x, mu, n, iters, dim, _debug_rounds=_debug_rounds)
-        v2, eig2 = _pi_rounds(
-            x, mu, n, iters, dim, v1=v1, _debug_rounds=_debug_rounds
-        )
+        v1, eig1 = _pi_rounds(x, mu, n, iters, dim)
+        v2, eig2 = _pi_rounds(x, mu, n, iters, dim, v1=v1)
     return mu, n, v1, eig1, v2, eig2
 
 
@@ -810,7 +785,6 @@ def pca2_coords(
     dim: int = 64,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    _debug_rounds: list | None = None,
 ) -> DataFrame:
     """Per-document 2-D PCA projection: coordinates along the top two
     principal components of the centered embedding matrix — the
@@ -844,32 +818,32 @@ def pca2_coords(
     x = emb.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__x")
     ).persist()
-    res = _centered_pi2(x, iters, dim, _debug_rounds=_debug_rounds)
-    if res is None:
-        x.unpersist()
-        return spark.createDataFrame([], out_schema)
-    mu, _n, v1, eig1, v2, eig2 = res
+    try:
+        res = _centered_pi2(x, iters, dim)
+        if res is None:
+            return spark.createDataFrame([], out_schema)
+        mu, _n, v1, eig1, v2, eig2 = res
 
-    def proj(vk: list) -> F.Column:
-        # one-F.expr SQL text (opt r17) — identical fold, see _pi_rounds
-        from spanner_jdbc_converter_spark.functions.vector import dlit, vec_sql
+        def proj(vk: list) -> F.Column:
+            # one-F.expr SQL text — the identical fold, see _pi_rounds
+            from spanner_jdbc_converter_spark.functions.vector import dlit, vec_sql
 
-        ck = 0.0
-        for d in range(dim):
-            ck = ck + mu[d] * vk[d]
-        return F.expr(f"({_fold_sql(vec_sql(vk))}) - {dlit(ck)}")
+            ck = 0.0
+            for d in range(dim):
+                ck = ck + mu[d] * vk[d]
+            return F.expr(f"({_fold_sql(vec_sql(vk))}) - {dlit(ck)}")
 
-    out = session.stats_reset_checkpoint(
-        x.select(
-            F.col("__id").alias("vec_id"),
-            F.round(proj(v1), 6).alias("pc1_coord"),
-            F.round(proj(v2), 6).alias("pc2_coord"),
-            F.round(F.lit(eig1), 6).alias("eig1"),
-            F.round(F.lit(eig2), 6).alias("eig2"),
+        return session.stats_reset_checkpoint(
+            x.select(
+                F.col("__id").alias("vec_id"),
+                F.round(proj(v1), 6).alias("pc1_coord"),
+                F.round(proj(v2), 6).alias("pc2_coord"),
+                F.round(F.lit(eig1), 6).alias("eig1"),
+                F.round(F.lit(eig2), 6).alias("eig2"),
+            )
         )
-    )
-    x.unpersist()
-    return out
+    finally:
+        x.unpersist()
 
 
 def pca2_directions(
@@ -885,8 +859,10 @@ def pca2_directions(
     recurrence, same fold-order contracts, so the pca2 oracle CTEs
     replay these exact doubles.  Empty input returns ([], [])."""
     x = emb.select(F.col(vec_col).alias("__x")).persist()
-    res = _centered_pi2(x, iters, dim)
-    x.unpersist()
+    try:
+        res = _centered_pi2(x, iters, dim)
+    finally:
+        x.unpersist()
     if res is None:
         return [], []
     _mu, _n, v1, _eig1, v2, _eig2 = res

@@ -255,6 +255,43 @@ def lsh_candidate_pairs(
 PAIRS_MAX_DF = 1000
 
 
+def _shared_shingle_counts(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    ngram: int,
+    block_cols: list[str] | None,
+    max_df: int | None,
+) -> DataFrame:
+    """The postings self-join :func:`jaccard_pairs` and
+    :func:`containment_pairs` share: distinct (doc, shingle) postings,
+    capped at ``max_df``, with each doc's post-cap set size as a window
+    COUNT on the id partitioning, self-joined on the shingle (+ block
+    columns) and counted per pair.  Output: id_a < id_b, __na = |A|,
+    __nb = |B|, __i = |A∩B|."""
+    blocks = list(block_cols or [])
+    posts = shingle_rows(
+        df, text_col, id_col, ngram, extra_cols=blocks, fallback_to_text=False
+    ).dropDuplicates([id_col, "__s"])
+    posts = _cap_postings(posts, blocks, max_df).withColumn(
+        "__n", F.count(F.lit(1)).over(Window.partitionBy(id_col))
+    )
+    a, b = posts.alias("a"), posts.alias("b")
+    cond = (F.col("a.__s") == F.col("b.__s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    for c in blocks:
+        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    return (
+        a.join(b, on=cond)
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.__n").alias("__na"),
+            F.col("b.__n").alias("__nb"),
+        )
+        .agg(F.count(F.lit(1)).alias("__i"))
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -307,27 +344,7 @@ def jaccard_pairs(
     bit-equal across engines)."""
     if threshold <= 0:
         raise ValueError("jaccard_pairs needs threshold > 0 (zero-overlap pairs never surface)")
-    blocks = list(block_cols or [])
-    posts = shingle_rows(
-        df, text_col, id_col, ngram, extra_cols=blocks, fallback_to_text=False
-    ).dropDuplicates([id_col, "__s"])
-    posts = _cap_postings(posts, blocks, max_df).withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy(id_col))
-    )
-    a, b = posts.alias("a"), posts.alias("b")
-    cond = (F.col("a.__s") == F.col("b.__s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    for c in blocks:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    inter = (
-        a.join(b, on=cond)
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.__n").alias("__na"),
-            F.col("b.__n").alias("__nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("__i"))
-    )
+    inter = _shared_shingle_counts(df, text_col, id_col, ngram, block_cols, max_df)
     jac = F.col("__i").cast("double") / (
         F.col("__na") + F.col("__nb") - F.col("__i")
     ).cast("double")
@@ -385,27 +402,7 @@ def containment_pairs(
     across engines."""
     if threshold <= 0:
         raise ValueError("containment_pairs needs threshold > 0")
-    blocks = list(block_cols or [])
-    posts = shingle_rows(
-        df, text_col, id_col, ngram, extra_cols=blocks, fallback_to_text=False
-    ).dropDuplicates([id_col, "__s"])
-    posts = _cap_postings(posts, blocks, max_df).withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy(id_col))
-    )
-    a, b = posts.alias("a"), posts.alias("b")
-    cond = (F.col("a.__s") == F.col("b.__s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    for c in blocks:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    inter = (
-        a.join(b, on=cond)
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.__n").alias("__na"),
-            F.col("b.__n").alias("__nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("__i"))
-    )
+    inter = _shared_shingle_counts(df, text_col, id_col, ngram, block_cols, max_df)
     ca = F.col("__i").cast("double") / F.col("__na").cast("double")
     cb = F.col("__i").cast("double") / F.col("__nb").cast("double")
     return (

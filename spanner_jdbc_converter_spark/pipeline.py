@@ -5,82 +5,35 @@ composed into the workflow the engine exists for.
 frame — profile → quality filter → exact (fingerprint) dedup → LSH
 near-dedup with connected-component grouping → benchmark
 decontamination → token-budget selection → deterministic train/val/test
-split → greedy sequence packing — and returns the packed frame plus a
-per-stage row-count report.
+split → greedy sequence packing — and returns the materialized packed
+frame plus its per-stage row counts.
 
 This is the LLM-pipeline analog of ``converter.convert_all`` (the
-reference's migration orchestrator): a driver-side composition of
-lazily-planned stages.  Every stage reuses an operator that is
-independently oracle-verified in ``plans/``; the orchestrator's own
-tests (tests/test_pipeline.py) assert the cross-stage invariants —
-determinism run-to-run, monotone row counts, no surviving duplicate
-fingerprints, budget respected, splits partitioning the selection, and
-bin fills bounded by capacity.
+reference's migration orchestrator): it runs the work and returns the
+finished result, so a caller holds no cache and owes no follow-up call.
+Every stage reuses an operator that is independently oracle-verified in
+``plans/``; the orchestrator's own tests (tests/test_pipeline.py)
+assert the cross-stage invariants — determinism run-to-run, monotone
+row counts, no surviving duplicate fingerprints, budget respected,
+splits partitioning the selection, and bin fills bounded by capacity.
 
 Scale notes: stages communicate only through DataFrames (one logical
 plan); filters are narrow; both dedups shuffle on hash keys; selection
 uses the banded prefix sum; packing shards on the composite (lang, hash)
-key.  The stage counts in the report are observed metrics, so they add
-no Spark job: they ride the one action that materializes the pipeline.
+key.  The stage counts are observed metrics, so they add no Spark job:
+they ride the one eager lineage cut that materializes the output.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spanner_jdbc_converter_spark import session
 from spanner_jdbc_converter_spark.functions.hashing import md5_long
 from spanner_jdbc_converter_spark.operators import dedup as dd
 from spanner_jdbc_converter_spark.operators import selection as sel
 from spanner_jdbc_converter_spark.operators import text as tx
-
-
-@dataclass
-class PipelineReport:
-    """Row counts after each stage.
-
-    ``observe`` attaches a COUNT metric to each stage frame; every count
-    rides the ONE action that materializes the pipeline (no extra jobs —
-    the observed nodes are already in the executed plan).  That action
-    must compute every partition: a ``limit`` would observe part of a
-    stage.  Call ``resolve()`` after it to populate ``stages``.
-    ``persisted`` collects the stage frames cached by curate_documents
-    so a caller that fully consumed the pipeline can release them.
-    """
-
-    stages: dict[str, int] = field(default_factory=dict)
-    persisted: list[DataFrame] = field(default_factory=list)
-    _pending: list = field(default_factory=list)
-
-    def observe(self, name: str, df: DataFrame) -> DataFrame:
-        """Wrap ``df`` with a row-count observation; the RETURNED frame
-        must be the one consumed downstream or the metric never fires."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        self._pending.append((name, obs, df))
-        return df.observe(obs, F.count(F.lit(1)).alias("n"))
-
-    def resolve(self) -> None:
-        """Read all pending observations (blocks until the action that
-        materialized the pipeline has completed them).
-
-        A stage that no executed plan ran leaves its observation
-        unfired (on an empty input the first four do not fire); such a
-        stage is counted directly."""
-        for name, obs, df in self._pending:
-            # obs.get raises on the empty row of an unfired observation
-            fired = obs._jo.getRow().length() > 0
-            self.stages[name] = obs.get["n"] if fired else df.count()
-        self._pending.clear()
-
-    def release(self) -> None:
-        """Unpersist every stage frame the pipeline cached."""
-        for df in self.persisted:
-            df.unpersist()
-        self.persisted.clear()
 
 
 def train_val_test(id_col: Column, val_pct: int = 10, test_pct: int = 10) -> Column:
@@ -107,97 +60,117 @@ def curate_documents(
     token_budget: int = 50_000,
     pack_capacity: int = 512,
     pack_shards: int = 16,
-) -> tuple[DataFrame, PipelineReport]:
-    """Run the full curation pipeline; returns (packed frame, report).
+) -> tuple[DataFrame, dict[str, int]]:
+    """Run the full curation pipeline; returns (packed frame, row count
+    after each stage).
 
     The packed frame has one row per selected document with its split
     assignment and packing coordinates: (lang, split, shard, doc_id,
-    n_tokens, bin_idx, bin_fill).  Run one action on it, then call
-    ``report.resolve()`` for the per-stage counts (see PipelineReport).
+    n_tokens, bin_idx, bin_fill).  It is materialized by one
+    :func:`session.stage` cut, whose job computes every partition, so
+    every stage count is read in full and no caller action is needed.
 
     The multiply-consumed stage frames are cached with MEMORY_AND_DISK
-    (``exact`` feeds both the LSH pair generation and the survivor
-    join; ``near`` feeds the overlap probe, the decontamination filter,
-    and selection): without it the lazy plan re-derives the
-    tokenizer/fingerprint subtree once per consumer.  Disk-backed, so
-    safe at scale.  The cache is also what makes each count exact: the
-    observation wraps each frame BEFORE its persist, so the metric node
-    lives inside the cached plan and fires exactly once (block-level
-    cache locking computes each cached partition once even with
-    concurrent consumers); uncached, a frame consumed by several
-    branches would re-plan its CollectMetrics subtree per consumer.
+    while the pipeline runs (``exact`` feeds both the LSH pair
+    generation and the survivor join; ``near`` feeds the overlap probe,
+    the decontamination filter, and selection): without it the lazy plan
+    re-derives the tokenizer/fingerprint subtree once per consumer.
+    Disk-backed, so safe at scale.  The cache is also what makes each
+    count exact: the observation wraps each frame BEFORE its persist, so
+    the metric node lives inside the cached plan and fires exactly once
+    (block-level cache locking computes each cached partition once even
+    with concurrent consumers); uncached, a frame consumed by several
+    branches would re-plan its CollectMetrics subtree per consumer.  The
+    caches are released before returning, also when the build fails.
     """
     from pyspark import StorageLevel
+    from pyspark.sql import Observation
 
-    report = PipelineReport()
+    observed: list[tuple[str, Observation, DataFrame]] = []
+    cached: list[DataFrame] = []
 
-    def staged(df: DataFrame) -> DataFrame:
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        report.persisted.append(out)
+    def observe(name: str, df: DataFrame) -> DataFrame:
+        # the RETURNED frame must be the one consumed downstream, or the
+        # metric never fires
+        obs = Observation()
+        observed.append((name, obs, df))
+        return df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+    def staged(name: str, df: DataFrame) -> DataFrame:
+        out = observe(name, df).persist(StorageLevel.MEMORY_AND_DISK)
+        cached.append(out)
         return out
 
-    docs = report.observe("input", docs)
+    try:
+        docs = observe("input", docs)
 
-    # 1. profile: token/quality/lang features from ONE staged tokenizer.
-    profiled = tx.document_profile(docs, text_col)
-    # The profile features (tokenizer, quality, fingerprint) feed every
-    # later stage — persist once here so no stage re-tokenizes.
-    flt = staged(
-        report.observe("quality_filter", profiled.filter(F.col("quality") >= quality_min))
-    )
+        # 1. profile: token/quality/lang features from ONE staged
+        #    tokenizer, cached once here so no later stage re-tokenizes.
+        profiled = tx.document_profile(docs, text_col)
+        flt = staged("quality_filter", profiled.filter(F.col("quality") >= quality_min))
 
-    # 2. exact dedup on normalized-content fingerprint (min-id keeper).
-    exact = staged(report.observe("exact_dedup", dd.fingerprint_dedup(flt, text_col, id_col)))
+        # 2. exact dedup on normalized-content fingerprint (min-id keeper).
+        exact = staged("exact_dedup", dd.fingerprint_dedup(flt, text_col, id_col))
 
-    # 3. near-dedup: LSH candidates → connected components → keep the
-    #    min-id representative of every near-dup group.
-    pairs = dd.lsh_candidate_pairs(exact, text_col, id_col)
-    groups = dd.connected_groups(pairs)  # (doc_id, group_id)
-    losers = groups.filter(F.col("doc_id") != F.col("group_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    near = staged(report.observe("near_dedup", exact.join(losers, id_col, "left_anti")))
+        # 3. near-dedup: LSH candidates → connected components → keep the
+        #    min-id representative of every near-dup group.
+        pairs = dd.lsh_candidate_pairs(exact, text_col, id_col)
+        groups = dd.connected_groups(pairs)  # (doc_id, group_id)
+        losers = groups.filter(F.col("doc_id") != F.col("group_id")).select(
+            F.col("doc_id").alias(id_col)
+        )
+        near = staged("near_dedup", exact.join(losers, id_col, "left_anti"))
 
-    # 4. decontamination: drop documents overlapping the benchmark set.
-    if benchmark_pred is not None:
-        overlap = dd.benchmark_overlap(near, benchmark_pred, text_col, id_col)
-        contaminated = overlap.filter(
-            F.col("overlap_frac") > overlap_max
-        ).select(id_col)
-        near = staged(
-            report.observe(
+        # 4. decontamination: drop documents overlapping the benchmark set.
+        if benchmark_pred is not None:
+            overlap = dd.benchmark_overlap(near, benchmark_pred, text_col, id_col)
+            contaminated = overlap.filter(
+                F.col("overlap_frac") > overlap_max
+            ).select(id_col)
+            near = staged(
                 "decontaminated",
                 near.filter(~benchmark_pred).join(contaminated, id_col, "left_anti"),
             )
+
+        # 5. token-budget selection (quality DESC, id ASC — banded prefix sum).
+        selected = observe(
+            "token_budget",
+            sel.select_token_budget(near, "quality", "n_tokens", id_col, token_budget),
         )
 
-    # 5. token-budget selection (quality DESC, id ASC — banded prefix sum).
-    selected = report.observe(
-        "token_budget",
-        sel.select_token_budget(near, "quality", "n_tokens", id_col, token_budget),
-    )
+        # 6. deterministic split, then 7. per-(lang, split) sequence packing
+        #    on the composite hash-sharded key.
+        split_frame = selected.withColumn("split", train_val_test(F.col(id_col)))
+        packed = sel.pack_token_sequences(
+            split_frame.withColumn(
+                "__grp", F.concat_ws("/", F.col(lang_col), F.col("split"))
+            ),
+            "__grp",
+            "n_tokens",
+            id_col,
+            pack_capacity,
+            shards=pack_shards,
+        )
+        out = packed.select(
+            F.split_part(F.col("__grp"), F.lit("/"), F.lit(1)).alias(lang_col),
+            F.split_part(F.col("__grp"), F.lit("/"), F.lit(2)).alias("split"),
+            "shard",
+            id_col,
+            "n_tokens",
+            "bin_idx",
+            "bin_fill",
+        )
+        (out,) = session.stage(observe("packed", out))
 
-    # 6. deterministic split, then 7. per-(lang, split) sequence packing
-    #    on the composite hash-sharded key.
-    split_frame = selected.withColumn("split", train_val_test(F.col(id_col)))
-    packed = sel.pack_token_sequences(
-        split_frame.withColumn(
-            "__grp", F.concat_ws("/", F.col(lang_col), F.col("split"))
-        ),
-        "__grp",
-        "n_tokens",
-        id_col,
-        pack_capacity,
-        shards=pack_shards,
-    )
-    out = packed.select(
-        F.split_part(F.col("__grp"), F.lit("/"), F.lit(1)).alias(lang_col),
-        F.split_part(F.col("__grp"), F.lit("/"), F.lit(2)).alias("split"),
-        "shard",
-        id_col,
-        "n_tokens",
-        "bin_idx",
-        "bin_fill",
-    )
-    out = report.observe("packed", out)
-    return out, report
+        # A stage that no executed plan ran leaves its observation
+        # unfired (on an empty input the first four do not fire); such a
+        # stage is counted directly.  obs.get raises on the empty row of
+        # an unfired observation.
+        stages = {
+            name: obs.get["n"] if obs._jo.getRow().length() > 0 else df.count()
+            for name, obs, df in observed
+        }
+    finally:
+        for df in cached:
+            df.unpersist()
+    return out, stages

@@ -39,6 +39,25 @@ def lazy_stages(monkeypatch):
 
 
 @pytest.fixture
+def collected_plans(spark, monkeypatch):
+    """A list that receives the executed physical plan (``simple``
+    explain) of every ``DataFrame.collect`` in one test, in order;
+    ``first``, ``head`` and ``take`` collect too."""
+    cls = type(spark.range(1))
+    real = cls.collect
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    plans: list[str] = []
+
+    def collect(self):
+        rows = real(self)
+        plans.append(self._jdf.queryExecution().explainString(mode))
+        return rows
+
+    monkeypatch.setattr(cls, "collect", collect)
+    return plans
+
+
+@pytest.fixture
 def connected_groups_rounds(monkeypatch):
     """``run(pairs, **kw)`` returns ``(dedup.connected_groups(pairs, **kw),
     rounds)``.  Rounds are counted from the stats-reset checkpoints the

@@ -227,8 +227,9 @@ def test_sinks_agree_on_every_convert_mode_cell(
     """Every ddl_mode × data_mode cell against an absent, an empty and a
     non-empty destination gives the same report, the same raise-or-not
     and the same final row count on the parquet sink and on a live
-    JDBC database.  A destination changes only when it is copied or
-    dropped; a dropped one the data phase skips ends empty."""
+    JDBC database.  A destination changes only when it is copied,
+    created or dropped; a created or dropped one the data phase skips
+    ends empty."""
     from spanner_jdbc_converter_spark.converter import (
         convert_table,
         convert_table_jdbc,
@@ -265,8 +266,9 @@ def test_sinks_agree_on_every_convert_mode_cell(
         )
         assert parquet_rows == jdbc_rows, state
         copied = parquet != "raised" and parquet[2] == "copied"
+        created = parquet != "raised" and parquet[0] == "created"
         dropped = parquet != "raised" and parquet[0] == "dropped_and_recreated"
-        want = n_source if copied else 0 if dropped else before
+        want = n_source if copied else 0 if dropped or created else before
         assert parquet_rows == want, state
 
 

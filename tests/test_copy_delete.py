@@ -216,21 +216,17 @@ def test_delete_pipeline_small_set_single_statement(spark, sf_dir):
     assert 0 < n_doomed < dl.SINGLE_DELETE_THRESHOLD
     survivors = dl.delete_pipeline(li, pk, doomed)
     assert survivors.count() == li.count() - n_doomed
+    # same schema, so the survivors can overwrite the table in place
+    assert survivors.columns == li.columns
 
 
 def test_delete_pipeline_ranged_path(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     pk = ["l_orderkey", "l_linenumber"]
     doomed = li.filter("l_orderkey % 2 = 0").select(*pk)
-    # force the ranged path regardless of fixture scale
-    orig = dl.SINGLE_DELETE_THRESHOLD
-    dl.SINGLE_DELETE_THRESHOLD = 1
-    try:
-        survivors = dl.delete_pipeline(li, pk, doomed, num_workers=4)
-        assert survivors.count() == li.count() - doomed.count()
-        assert survivors.join(doomed, on=pk, how="left_semi").isEmpty()
-    finally:
-        dl.SINGLE_DELETE_THRESHOLD = orig
+    survivors = dl.delete_pipeline(li, pk, doomed, num_workers=4)
+    assert survivors.count() == li.count() - doomed.count()
+    assert survivors.join(doomed, on=pk, how="left_semi").isEmpty()
 
 
 def test_delete_strategy_threshold():
@@ -255,22 +251,17 @@ def test_lexicographic_range_sql_string_composite_pk(spark):
 
 
 def test_delete_pipeline_ranged_preserves_duplicate_multiplicity(spark):
-    # duplicate surviving rows inside a delete range must keep their
+    # duplicate surviving rows between doomed keys must keep their
     # multiplicity (subtract = EXCEPT DISTINCT would collapse them)
     rows = [(k, 1, "payload") for k in range(1, 101)]
     rows += [(50, 1, "payload"), (50, 1, "payload")]  # 3 total copies of key 50
     target = spark.createDataFrame(rows, ["k", "sub", "v"])
     pk = ["k", "sub"]
     doomed = target.filter("k % 2 = 1").select(*pk).distinct()
-    orig = dl.SINGLE_DELETE_THRESHOLD
-    dl.SINGLE_DELETE_THRESHOLD = 1  # force ranged path
-    try:
-        survivors = dl.delete_pipeline(target, pk, doomed, num_workers=4)
-        # 50 even keys survive; key 50 keeps all 3 copies
-        assert survivors.count() == 52
-        assert survivors.filter("k = 50").count() == 3
-    finally:
-        dl.SINGLE_DELETE_THRESHOLD = orig
+    survivors = dl.delete_pipeline(target, pk, doomed, num_workers=4)
+    # 50 even keys survive; key 50 keeps all 3 copies
+    assert survivors.count() == 52
+    assert survivors.filter("k = 50").count() == 3
 
 
 # -- bucketed co-located join (scale toolkit) -------------------------------

@@ -92,12 +92,11 @@ def test_pipeline_empty_documents(spark):
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    out, report = curate_documents(
+    out, stages = curate_documents(
         spark.createDataFrame([], sch), token_budget=1000, pack_capacity=64
     )
     assert out.count() == 0
-    report.resolve()
-    assert report.stages["input"] == 0
+    assert stages["input"] == 0
 
 
 DOC_SCHEMA = T.StructType(

@@ -7,6 +7,7 @@ selection, and packing bounded by capacity."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spanner_jdbc_converter_spark.catalog import load_table
@@ -30,10 +31,8 @@ def _run(spark, sf_dir):
 
 
 def test_pipeline_invariants(spark, sf_dir):
-    out, report = _run(spark, sf_dir)
+    out, s = _run(spark, sf_dir)
     rows = out.collect()
-    report.resolve()
-    s = report.stages
 
     # stages only ever drop rows, and every stage kept something
     order = [
@@ -84,7 +83,7 @@ def test_pipeline_is_deterministic(spark, sf_dir):
 
 def test_observed_stage_counts_match_the_oracle(spark, sf_dir, duck):
     """The stage counts observed on the pipeline's one materializing
-    action equal the DuckDB oracle's recomputation of every stage."""
+    lineage cut equal the DuckDB oracle's recomputation of every stage."""
     from spanner_jdbc_converter_spark.oracle import compare_frames
     from spanner_jdbc_converter_spark.plans import ORACLE, etl
 
@@ -118,5 +117,30 @@ def test_pipeline_entries_share_one_execution(spark, sf_dir):
     assert got == stages
     # the invariants frame aggregates the SAME packed frame
     assert inv.agg(F.sum("n_docs")).first()[0] == packed.count() == stages["packed"]
-    packed.unpersist()
 
+
+def test_curate_documents_leaves_no_stage_cache(spark, sf_dir, monkeypatch):
+    """The stage caches are released before ``curate_documents`` returns,
+    and also when its build fails, so no caller has to free them."""
+    from spanner_jdbc_converter_spark import session
+
+    def stage_caches() -> set[int]:
+        # A cached query plan names its RDD after the plan; the local
+        # checkpoints (the output, connected-groups rounds) are unnamed.
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in rdds.keys() if rdds[k].name() is not None}
+
+    before = stage_caches()
+    out, stages = _run(spark, sf_dir)
+    assert out.count() == stages["packed"] > 0
+    assert stage_caches() - before == set()
+
+    def fail(*frames):
+        for df in frames:  # run every stage, then fail like a lost job
+            df.count()
+        raise RuntimeError("stage failed")
+
+    monkeypatch.setattr(session, "stage", fail)
+    with pytest.raises(RuntimeError, match="stage failed"):
+        _run(spark, sf_dir)
+    assert stage_caches() - before == set()

@@ -47,8 +47,10 @@ def test_minhash_single_exchange_pipeline(spark, sf_dir):
     assert "CartesianProduct" not in head
 
 
-def test_jaccard_is_inverted_index_not_all_pairs(spark, sf_dir):
-    head = _plan(spark, "dedup_jaccard_pairs", sf_dir).split("\n\n")[0]
+@pytest.mark.parametrize("name", ["dedup_jaccard_pairs", "dedup_containment_pairs"])
+def test_jaccard_is_inverted_index_not_all_pairs(spark, sf_dir, name):
+    """Both pair kernels ride the one postings self-join."""
+    head = _plan(spark, name, sf_dir).split("\n\n")[0]
     # all-pairs would appear as a nested-loop/cartesian join
     assert "CartesianProduct" not in head
     assert "BroadcastNestedLoopJoin" not in head
@@ -696,7 +698,7 @@ def test_dsir_lazy_plan_keeps_the_scale_contract(spark, sf_dir, lazy_stages):
     assert "SortMergeJoin" not in lplan
 
 
-def test_kcenter_coreset_rounds_read_cache_not_lineage(spark):
+def test_kcenter_coreset_rounds_read_cache_not_lineage(spark, collected_plans):
     """VERDICT r10 #1: every FPS round after the first must read the
     PREDECESSOR round's persisted survivors (InMemoryTableScan), not
     replay the whole lineage back to the source — unpersisted, round t
@@ -713,16 +715,17 @@ def test_kcenter_coreset_rounds_read_cache_not_lineage(spark):
             (F.col("id") % 7).cast("double"), (F.col("id") % 5).cast("double")
         ).alias("embedding"),
     )
-    plans: list[str] = []
-    out = cl.kcenter_coreset(emb, k=5, _debug_rounds=plans)
+    out = cl.kcenter_coreset(emb, k=5)
     assert out.count() == 5
-    assert len(plans) == 4  # rounds 2..5
+    assert len(collected_plans) == 5  # the seed lookup, then rounds 2..5
     # round 2's frame is the first persisted snapshot (built directly
-    # from the source); every LATER round must scan its predecessor's
-    # cache and never reach back to the source relation
-    for plan in plans[1:]:
-        assert "InMemoryTableScan" in plan, plan
-        assert "Scan ExistingRDD" not in plan and "Scan parquet" not in plan, plan
+    # from the source); every LATER round scans its own cache, and that
+    # frame was built from its predecessor's cache, never from the source
+    for plan in collected_plans[2:]:
+        live, own = plan.split("InMemoryRelation")[:2]
+        assert "InMemoryTableScan" in live, plan
+        assert "InMemoryTableScan" in own, plan
+        assert "Range (" not in own, plan
 
 
 def test_bucketed_join_is_exchange_free(spark, sf_dir):
@@ -852,7 +855,7 @@ def test_ivfpq_candidate_sized_joins_arrow_encode(spark, sf_dir):
             assert "query_id" in ln or "match_id" in ln, ln
 
 
-def test_power_iteration_rounds_read_cache_not_source(spark, sf_dir):
+def test_power_iteration_rounds_read_cache_not_source(spark, sf_dir, collected_plans):
     """VERDICT r12 #2 (the kcenter precedent): every matvec round must
     scan the persisted single-column frame (InMemoryTableScan), never
     replay lineage to the parquet source — unpersisted, round t would
@@ -861,10 +864,10 @@ def test_power_iteration_rounds_read_cache_not_source(spark, sf_dir):
     from spanner_jdbc_converter_spark.operators import clustering as cl
 
     emb = load_table(spark, sf_dir, "embeddings")
-    plans: list[str] = []
-    out = cl.power_iteration_pc1(emb, _debug_rounds=plans)
+    out = cl.power_iteration_pc1(emb)
     assert out.count() == 64
-    assert len(plans) == cl.PC1_ITERS
+    plans = collected_plans
+    assert len(plans) == 1 + cl.PC1_ITERS  # the mean pass, then the rounds
     for plan in plans:
         assert "InMemoryTableScan" in plan, plan
         # the live execution path (everything ABOVE the cached-relation
@@ -873,7 +876,7 @@ def test_power_iteration_rounds_read_cache_not_source(spark, sf_dir):
         assert "Scan parquet" not in plan.split("InMemoryRelation")[0], plan
 
 
-def test_pca2_rounds_and_projection_read_cache(spark, sf_dir):
+def test_pca2_rounds_and_projection_read_cache(spark, sf_dir, collected_plans):
     """VERDICT r12 #2 + ADVICE r12: all 2·iters deflation rounds AND
     the RETURNED projection frame read the persisted input — the
     premature unpersist that silently recomputed the final scan from
@@ -881,12 +884,12 @@ def test_pca2_rounds_and_projection_read_cache(spark, sf_dir):
     from spanner_jdbc_converter_spark.operators import clustering as cl
     from spanner_jdbc_converter_spark.plans import QUERIES
 
-    plans: list[str] = []
     from spanner_jdbc_converter_spark.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = cl.pca2_coords(emb, _debug_rounds=plans)
-    assert len(plans) == 2 * cl.PC1_ITERS
+    out = cl.pca2_coords(emb)
+    plans = collected_plans
+    assert len(plans) == 1 + 2 * cl.PC1_ITERS  # the mean pass, then the rounds
     for plan in plans:
         assert "InMemoryTableScan" in plan, plan
         assert "Scan parquet" not in plan.split("InMemoryRelation")[0], plan
